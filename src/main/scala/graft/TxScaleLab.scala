@@ -14,7 +14,7 @@ import graft.operators.TxTable
   *     write referencing all parent files — the O(F) floor of a flat
   *     manifest);
   *   - snapshot parse time (read side of the same O(F) list);
-  *   - prunedFiles evaluation (driver-side stat scan, O(F));
+  *   - TxFileIndex.prunedFiles evaluation (driver-side stat scan, O(F));
   *   - a narrow mergeByKeyPruned (prune O(F) + rewrite O(touched));
   *   - a contained-range deleteRange (metadata-only drops);
   *   - a range-pruned MoR deleteWhere (position scan of ~1 file + a
@@ -321,6 +321,17 @@ object TxScaleLab {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
 
+    // prune probes go through the index a format("tx") scan plans with;
+    // the head resolve sits inside each timed block, as a read's would
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      EqualTo, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    def headIndex(r: String) =
+      new graft.sources.TxFileIndex(r, TxTable.currentSnapshot(r).get)
+    val kAttr = AttributeReference("k", LongType)()
+    val vAttr = AttributeReference("v", LongType)()
+    val pAttr = AttributeReference("p", StringType)()
+
     // each append commits `filesPerCommit` files with tight disjoint key
     // ranges (10 keys per file) and footer stats, so the narrow merge and
     // the contained delete below exercise the REAL prune: one touched
@@ -371,8 +382,9 @@ object TxScaleLab {
       val appendS = appendBatch() // marginal commit cost at this head size
       val snapBefore = TxTable.currentSnapshot(root).get
       val (snap, parseS) = timed(TxTable.currentSnapshot(root).get)
-      val (pruned, pruneS) =
-        timed(TxTable.prunedFiles(root, "k", nextKey - 45.0, nextKey - 41.0))
+      val (pruned, pruneS) = timed(headIndex(root).prunedFiles(Seq(
+        GreaterThanOrEqual(kAttr, Literal(nextKey - 45L)),
+        LessThanOrEqual(kAttr, Literal(nextKey - 41L)))))
       // narrow merge: one existing key → the prune should touch ~1 file
       val upd = Seq((nextKey - 5L, 99L)).toDF("k", "v")
       val (_, mergeS) = timed(TxTable.mergeByKeyPruned(spark, root, upd, "k"))
@@ -396,7 +408,7 @@ object TxScaleLab {
       val (_, bloomS) = timed(TxTable.commit(spark, root, bdf,
         TxTable.Append, statsCols = Seq("k"), bloomCols = Seq("v")))
       val (survivors, probeS) = timed(
-        TxTable.prunedFilesIn(root, "v", Seq(3L)))
+        headIndex(root).prunedFiles(Seq(EqualTo(vAttr, Literal(3L)))))
       val head = TxTable.currentVersion(root).get
       val (nFeed, feedS) = timed(graft.operators.TxChangeFeed
         .readChangeFeed(spark, root, head - 1, head, "k").count())
@@ -417,8 +429,8 @@ object TxScaleLab {
           < pTarget) appendPartitioned()
       val (_, pAppendS) = timed(appendPartitioned())
       val (_, pParseS) = timed(TxTable.currentSnapshot(rootP).get)
-      val (pPruned, pPruneS) =
-        timed(TxTable.partPrunedFiles(rootP, "p", Set("7")))
+      val (pPruned, pPruneS) = timed(headIndex(rootP).prunedFiles(
+        Seq(EqualTo(pAttr, Literal("7")))))
       val (_, pStatsS) = timed(
         TxTable.partitionRowCounts(spark, rootP, "p").collect())
       val swap = spark.range(0L, 500L)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.DecimalType
   *  - q166 additive schema evolution: a commit may append files carrying
   *    new columns; readers see old files' missing columns as null;
   *  - q167 [[TxTable.commitZOrdered]]: 2-D Morton layout + per-file stats
-  *    on BOTH dimensions, so [[TxTable.readPrunedMulti]] skips files for
+  *    on BOTH dimensions, so a `format("tx")` read skips files for
   *    predicates on either column (1-D clustering can only serve one).
   *
   * Every query's visible result restates in plain SQL over `orders`, so
@@ -30,6 +30,14 @@ object TxMaint {
 
   private def dsum(c: org.apache.spark.sql.Column) =
     sum(c.cast(DecimalType(18, 2))).cast("double")
+
+  /** `lo <= c <= hi` for every (c, lo, hi) over the z-order demos'
+    * integral axes — long bounds, so the pushed comparisons reach
+    * [[graft.sources.TxFileIndex]] without a cast around the column.
+    */
+  private def inRanges(specs: Seq[(String, Double, Double)]) =
+    specs.map { case (c, lo, hi) => col(c).between(lo.toLong, hi.toLong) }
+      .reduce(_ && _)
 
   private def offTemp(df: DataFrame, tmp: JPath): DataFrame = {
     val out = df.localCheckpoint(true)
@@ -94,7 +102,7 @@ object TxMaint {
   // OPTIMIZE as a transaction: four unclustered CDC-style appends (one
   // file group per commit, no stats anywhere) are rewritten by
   // `optimize(4, clusterBy = o_totalprice)` into four range-clustered
-  // files WITH footer stats — after which the same readPruned range
+  // files WITH footer stats — after which the same pruned range
   // aggregate that would have scanned every CDC file skips most of the
   // layout. The oracle proves optimize changed NOTHING visible: the
   // answer is exactly the plain filter's over `orders`.
@@ -109,7 +117,8 @@ object TxMaint {
         if (i == 0) TxTable.Overwrite else TxTable.Append)
     }
     TxTable.optimize(s, root, targetFiles = 4, clusterBy = Seq("o_totalprice"))
-    val out = TxTable.readPruned(s, root, "o_totalprice", 10000.0, 60000.0)
+    val out = s.read.format("tx").load(root)
+      .filter(col("o_totalprice").between(10000.0, 60000.0))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_price"))
@@ -179,8 +188,9 @@ object TxMaint {
         floor(col("o_totalprice") / 16d).cast("long").as("price_bin"))
     TxTable.commitZOrdered(s, root, src, "o_custkey", "price_bin",
       targetFiles = 8)
-    val out = TxTable.readPrunedMulti(s, root,
-      Seq(("o_custkey", ZCustLo, ZCustHi), ("price_bin", ZBinLo, ZBinHi)))
+    val out = s.read.format("tx").load(root)
+      .filter(inRanges(Seq(("o_custkey", ZCustLo, ZCustHi),
+        ("price_bin", ZBinLo, ZBinHi))))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_price"))
@@ -435,7 +445,7 @@ object TxMaint {
   // — so per-file min/max serves PRICE ranges and is useless for an
   // o_orderkey point lookup (keys scatter across every file) — with
   // per-file bloom filters on o_orderkey in the manifest. The lookup set
-  // is 7 data-derived keys (bounded driver collect); readPrunedIn probes
+  // is 7 data-derived keys (bounded driver collect); the pushed IN probes
   // each file's bloom with the same xxhash64 family the commit built and
   // scans only possible-containing files (TxBloomSpec pins the skipping
   // ratio and the no-false-negative contract; at 100 TB this is Delta's
@@ -453,7 +463,8 @@ object TxMaint {
         .select("o_orderkey", "o_orderpriority", "o_totalprice"),
       TxTable.Overwrite, clusterBy = Some("o_totalprice"),
       bloomCols = Seq("o_orderkey"))
-    val out = TxTable.readPrunedIn(s, root, "o_orderkey", keys)
+    val out = s.read.format("tx").load(root)
+      .filter(col("o_orderkey").isin(keys: _*))
       .groupBy("o_orderkey")
       .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice"))
         .as("total_price"))
@@ -585,7 +596,8 @@ object TxMaint {
       clusterBy = Some("n_chars"))
     TxTable.renameColumn(s, root, "n_chars", "chars")
     TxTable.dropColumn(s, root, "lang")
-    val out = TxTable.readPruned(s, root, "chars", 200.0, 600.0)
+    val out = s.read.format("tx").load(root)
+      .filter(col("chars").between(200L, 600L))
       .groupBy("origin")
       .agg(count(lit(1)).as("n_docs"),
         sum("chars").cast("long").as("total_chars"))
@@ -742,10 +754,10 @@ object TxMaint {
       ("o_custkey", Z3CustLo, Z3CustHi), ("price_bin", Z3BinLo, Z3BinHi),
       ("date_bin", Z3DayLo, Z3DayHi))
     // in-query guard: the gate itself certifies the layout skipped files
-    require(TxTable.prunedFilesMulti(root, specs).size <
-      TxTable.currentSnapshot(root).get.files.size,
-      "3-D z-order pruned nothing — layout regression")
-    val out = TxTable.readPrunedMulti(s, root, specs)
+    val snap = TxTable.currentSnapshot(root).get
+    require(TxTable.statPrunedFiles(root, snap, specs).size <
+      snap.files.size, "3-D z-order pruned nothing — layout regression")
+    val out = s.read.format("tx").load(root).filter(inRanges(specs))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_price"))
@@ -794,10 +806,11 @@ object TxMaint {
     val specs = Seq(
       ("o_custkey", Z3CustLo, Z3CustHi), ("price_bin", Z3BinLo, Z3BinHi),
       ("date_bin", Z3DayLo, Z3DayHi))
-    require(TxTable.prunedFilesMulti(root, specs).size <
-      TxTable.currentSnapshot(root).get.files.size,
+    val snap = TxTable.currentSnapshot(root).get
+    require(TxTable.statPrunedFiles(root, snap, specs).size <
+      snap.files.size,
       "3-D hilbert re-cluster pruned nothing — layout regression")
-    val out = TxTable.readPrunedMulti(s, root, specs)
+    val out = s.read.format("tx").load(root).filter(inRanges(specs))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_price"))

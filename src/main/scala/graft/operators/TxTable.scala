@@ -175,14 +175,15 @@ object TxTable {
     * head in O(1) and skips a batch it already published.
     *
     * `stats` holds per-file (column, min, max, numNulls) lines — Delta-
-    * style data skipping: [[prunedFiles]] drops files whose recorded range
-    * cannot intersect a predicate BEFORE Spark plans the scan. A file may
-    * carry ranges for SEVERAL columns (one `stat` manifest line each — the
-    * multi-dimensional layout [[commitZOrdered]] exploits); files without
-    * a stats line are never pruned (correctness does not depend on stats
-    * presence), and [[readPruned]] re-applies the exact filter, so stats
-    * only ever REMOVE provably-dead I/O. `numNulls` is the footer's null
-    * count for the column, or -1 when the footer doesn't state one:
+    * style data skipping: [[graft.sources.TxFileIndex]] drops files whose
+    * recorded range cannot intersect a pushed predicate BEFORE Spark plans
+    * the scan. A file may carry ranges for SEVERAL columns (one `stat`
+    * manifest line each — the multi-dimensional layout [[commitZOrdered]]
+    * exploits); files without a stats line are never pruned (correctness
+    * does not depend on stats presence), and the scan re-applies the
+    * exact filter, so stats only ever REMOVE provably-dead I/O.
+    * `numNulls` is the footer's null count for the column, or -1 when the
+    * footer doesn't state one:
     * parquet min/max EXCLUDE nulls, so any decision that deletes or skips
     * whole files based on range CONTAINMENT (not mere intersection) must
     * additionally require `numNulls == 0` — [[deleteRange]]'s metadata-
@@ -213,11 +214,11 @@ object TxTable {
     * bloom filter index): (column, mBits, k, base64 bitset) built at
     * commit time over the file's non-null values. Where min/max stats
     * only serve the clustered dimension, a bloom answers point lookups
-    * on a SCATTERED column — [[prunedFilesIn]] drops every file whose
-    * filter provably misses all probed values. False positives only cost
-    * extra scan; false negatives are impossible (same hash family at
-    * build and probe), and [[readPrunedIn]] re-applies the exact IN
-    * filter regardless.
+    * on a SCATTERED column — a pushed equality/IN filter drops every file
+    * whose filter provably misses all probed values. False positives only
+    * cost extra scan; false negatives are impossible (same hash family at
+    * build and probe), and the scan re-applies the exact filter
+    * regardless.
     */
   /** `parts` maps a data file to its PARTITION VALUES ((column, value)
     * pairs; None = the hive null sentinel) — Iceberg-style partitioning:
@@ -225,8 +226,8 @@ object TxTable {
     * the partition column stays present in the data files, so every
     * read seam (DV anti-join, maintenance rewrite inputs, time travel)
     * works unchanged and pruning is a pure metadata filter
-    * ([[partPrunedFiles]]). Files without a part line for a column are
-    * never pruned on it; [[readPartitionPruned]] re-applies the exact
+    * ([[graft.sources.TxFileIndex]]). Files without a part line for a
+    * column are never pruned on it; the scan re-applies the exact
     * predicate, so like stats, parts only ever remove provably-dead
     * I/O. Maintenance rewrites DROP part lines for files they rewrite
     * (a rewritten file may mix partitions) — pruning degrades, never
@@ -1503,7 +1504,7 @@ object TxTable {
     * Spark's codegen'd xxhash64 — on the value cast to long for integral
     * columns, on the raw UTF-8 bytes for string columns — replicated
     * bit-exactly at probe time by evaluating the same catalyst
-    * expression driver-side ([[prunedFilesIn]] / [[prunedFilesInStr]]).
+    * expression driver-side ([[bloomProbes]] / [[bloomProbesStr]]).
     * The bloom LINE carries no type: the probe side dispatches on the
     * column's schema type, which is also what chose the build hash, so
     * the two can never disagree. One m for the whole batch, sized from
@@ -1557,20 +1558,10 @@ object TxTable {
     }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
   }
 
-  /** The head's files whose bloom filter on `colName` might contain AT
-    * LEAST ONE of `values` (or that carry no bloom for the column —
-    * skipping only ever removes provably-dead I/O). The probe evaluates
-    * the SAME catalyst xxhash64 expressions the build ran, driver-side
-    * on literals, so build and probe can never disagree — no false
-    * negatives by construction, spec-pinned in TxBloomSpec.
+  /** Integral probes: the SAME catalyst xxhash64 expressions the build
+    * ran, evaluated driver-side on literals, so build and probe can never
+    * disagree — no false negatives by construction (TxBloomSpec).
     */
-  def prunedFilesIn(root: String, colName: String,
-      values: Seq[Long]): Seq[String] = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    bloomPrunedFiles(snap, colName, values)
-  }
-
   private[graft] def bloomProbes(values: Seq[Long]): Seq[(Long, Long)] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     values.map { v =>
@@ -1600,18 +1591,12 @@ object TxTable {
     }
   }
 
-  private def bloomPrunedFiles(snap: Snapshot, colName: String,
-      values: Seq[Long]): Seq[String] = {
-    val probes = bloomProbes(values)
-    snap.files.filter(bloomMayContainAny(snap, _, colName, probes))
-  }
-
   /** One file's bloom verdict for pre-computed probes ([[bloomProbes]]):
     * true when the file might contain at least one probed value, or
     * carries no bloom on the column (skipping never lies). Exposed
-    * within graft so [[graft.sources.TxFileIndex]] can apply the SAME
-    * probe the dedicated read path uses when Catalyst pushes an
-    * equality/IN filter into a `format("tx")` scan.
+    * within graft for [[graft.sources.TxFileIndex]], which applies it
+    * when Catalyst pushes an equality/IN filter into a `format("tx")`
+    * scan.
     */
   private[graft] def bloomMayContainAny(snap: Snapshot, f: String,
       colName: String, probes: Seq[(Long, Long)]): Boolean =
@@ -1627,54 +1612,6 @@ object TxTable {
         }
       case None => true
     }
-
-  /** Point-lookup read (`colName IN values`) with bloom file skipping;
-    * the exact IN filter re-applies on the survivors (and deletion
-    * vectors apply as everywhere), so the result is identical to
-    * `read(...).filter(isin)` whatever the filters say.
-    */
-  def readPrunedIn(s: SparkSession, root: String, colName: String,
-      values: Seq[Long]): DataFrame = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    val files = bloomPrunedFiles(snap, colName, values)
-    val df =
-      if (files.isEmpty) readSnapshot(s, root, snap).limit(0)
-      else readFilesWithDvs(s, root, snap, files)
-    df.filter(col(colName).isin(values: _*))
-  }
-
-  /** [[prunedFilesIn]] for a STRING bloom column. */
-  def prunedFilesInStr(root: String, colName: String,
-      values: Seq[String]): Seq[String] = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    val probes = bloomProbesStr(values.map(
-      org.apache.spark.unsafe.types.UTF8String.fromString))
-    snap.files.filter(bloomMayContainAny(snap, _, colName, probes))
-  }
-
-  /** [[readPrunedIn]] for a STRING bloom column (`colName IN values`
-    * point lookups — the uuid/name/e-mail needle class min/max stats
-    * cannot serve because high-cardinality strings scatter across every
-    * file's [min, max]).
-    */
-  def readPrunedInStr(s: SparkSession, root: String, colName: String,
-      values: Seq[String]): DataFrame = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    // one snapshot resolve: probing through prunedFilesInStr would
-    // re-resolve the head, and a concurrent commit between the two
-    // reads could pair gen-N files with a gen-N+1 snapshot's DVs
-    val probes = bloomProbesStr(values.map(
-      org.apache.spark.unsafe.types.UTF8String.fromString))
-    val files = snap.files.filter(
-      bloomMayContainAny(snap, _, colName, probes))
-    val df =
-      if (files.isEmpty) readSnapshot(s, root, snap).limit(0)
-      else readFilesWithDvs(s, root, snap, files)
-    df.filter(col(colName).isin(values: _*))
-  }
 
   /** One-pass violation count of every CHECK over `df`; throws on any
     * violated constraint. SQL-standard CHECK semantics: NULL passes,
@@ -1787,7 +1724,7 @@ object TxTable {
             "re-add the constraint against the new name first") }
       // partition columns RENAME freely since r18: part lines keep their
       // write-time names and every consumer resolves through the alias
-      // chains (partFileMatches/partOf/surfacedPartitionFields on the
+      // chains (TxFileIndex's partOf/surfacedPartitionFields on the
       // read side; dpo classification, partitionRowCounts and the
       // writers' logicalPartCols on the write side) — the hive path
       // segments themselves never embed the column name (the duplicate
@@ -2263,7 +2200,7 @@ object TxTable {
     * `clusterBy = Some(col)` range-clusters the data files on a numeric
     * column and records each file's footer (min, max) in the manifest —
     * the data-skipping layout: tight per-file ranges make
-    * [[prunedFiles]] drop most files for a selective range predicate.
+    * a `format("tx")` scan drop most files for a selective range predicate.
     * Clustering changes only file ASSIGNMENT (any assignment is correct;
     * stats are read back from the actual footers), so the
     * range-shuffle's sampled boundaries are correctness-irrelevant here.
@@ -2488,180 +2425,25 @@ object TxTable {
     committed
   }
 
-  /** The head's files that can intersect EVERY `lo <= col <= hi`
-    * predicate (conjunction): a file with recorded stats on a predicate
-    * column is dropped when that range provably misses; a (file, column)
-    * without stats never prunes. Manifest-level pruning — the skipped
-    * files never reach Spark's scan planning at all.
+  /** The files of `snap` whose recorded stats can intersect EVERY
+    * `lo <= col <= hi` conjunct — the tuple form `deleteWhere` /
+    * `updateWhere(prune = ...)` and the streaming state's pruned reads
+    * speak, evaluated by [[graft.sources.TxFileIndex]] like every other
+    * manifest prune (alias-aware, degrade-never-lie). The attributes are
+    * built directly: an unresolved `col(c)` matches no pruning shape and
+    * would silently keep every file.
     */
-  def prunedFilesMulti(root: String,
+  private[graft] def statPrunedFiles(root: String, snap: Snapshot,
       preds: Seq[(String, Double, Double)]): Seq[String] = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    snap.files.filter { f =>
-      val ranges = snap.stats.getOrElse(f, Seq.empty)
-      preds.forall { case (colName, lo, hi) =>
-        val names = namesOf(snap, colName).toSet
-        ranges.find(r => names(r._1)) match {
-          case Some((_, mn, mx, _)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    }
-  }
-
-  def prunedFiles(root: String, colName: String, lo: Double,
-      hi: Double): Seq[String] =
-    prunedFilesMulti(root, Seq((colName, lo, hi)))
-
-  /** The head's files that can intersect AT LEAST ONE of `ranges` on
-    * `colName` — the DISJUNCTION form of data skipping (an IN-list or
-    * multi-range predicate: `col IN (...)` prunes as the union of point
-    * ranges). A file without stats on the column always survives; the
-    * caller's exact predicate (or equi-join) re-applies on the survivors,
-    * so pruning only removes provably-dead I/O. Driver cost is
-    * O(F · |ranges|) comparisons against a sorted range list — collapse
-    * adjacent ranges before calling when |ranges| is large.
-    */
-  def prunedFilesAny(root: String, colName: String,
-      ranges: Seq[(Double, Double)]): Seq[String] = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    val names = namesOf(snap, colName).toSet
-    snap.files.filter { f =>
-      snap.stats.getOrElse(f, Seq.empty).find(r => names(r._1)) match {
-        case Some((_, mn, mx, _)) =>
-          ranges.exists { case (lo, hi) => mx >= lo && mn <= hi }
-        case None => true
-      }
-    }
-  }
-
-  /** Range read with manifest-level data skipping; the exact predicates
-    * are re-applied, so the result is identical to `read(...).filter(...)`
-    * whatever the stats say — skipping only removes provably-dead I/O.
-    */
-  def readPrunedMulti(s: SparkSession, root: String,
-      preds: Seq[(String, Double, Double)]): DataFrame = {
-    // one snapshot resolution for both the pruning and the read — a
-    // concurrent commit between the two would otherwise mix versions
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    val files = snap.files.filter { f =>
-      val ranges = snap.stats.getOrElse(f, Seq.empty)
-      preds.forall { case (colName, lo, hi) =>
-        val names = namesOf(snap, colName).toSet
-        ranges.find(r => names(r._1)) match {
-          case Some((_, mn, mx, _)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    }
-    val df =
-      if (files.isEmpty)
-        readSnapshot(s, root, snap).limit(0) // schema-preserving empty
-      else readFilesWithDvs(s, root, snap, files)
-    preds.foldLeft(df) { case (d, (c, lo, hi)) =>
-      d.filter(col(c) >= lo && col(c) <= hi)
-    }
-  }
-
-  def readPruned(s: SparkSession, root: String, colName: String, lo: Double,
-      hi: Double): DataFrame =
-    readPrunedMulti(s, root, Seq((colName, lo, hi)))
-
-  /** The head's files whose recorded partition value on `colName` is one
-    * of `values` — pure manifest metadata (no footer I/O; skipped files
-    * never reach Spark's scan planning). A file WITHOUT a part line on
-    * the column is kept (a rewritten or unpartitioned file may hold any
-    * values — pruning degrades, never lies); a null partition value
-    * matches only when `includeNull`.
-    */
-  def partPrunedFiles(root: String, colName: String,
-      values: Set[String], includeNull: Boolean = false): Seq[String] = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    partPrunedOf(snap, colName, values, includeNull)
-  }
-
-  private def partPrunedOf(snap: Snapshot, colName: String,
-      values: Set[String], includeNull: Boolean): Seq[String] =
-    snap.files.filter(partFileMatches(snap, _, colName, values, includeNull))
-
-  private def partFileMatches(snap: Snapshot, f: String, colName: String,
-      values: Set[String], includeNull: Boolean): Boolean =
-    snap.parts.getOrElse(f, Seq.empty)
-      .find(e => namesOf(snap, colName).contains(e._1)) match {
-      case Some((_, Some(v))) => values.contains(v)
-      case Some((_, None)) => includeNull
-      case None => true
-    }
-
-  /** Conjunctive multi-column partition pruning (the date × tenant
-    * layout): a file survives only when EVERY (col, values) spec
-    * matches its recorded part line — with the same degrade-never-lie
-    * rule per column (no part line on a column ⇒ that column keeps the
-    * file). Pure manifest metadata; the dimensions multiply with each
-    * other and with stat-range pruning
-    * ([[readPartitionRangePrunedMulti]]).
-    */
-  def partPrunedFilesMulti(root: String,
-      specs: Seq[(String, Set[String])],
-      includeNull: Boolean = false): Seq[String] = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    snap.files.filter(f => specs.forall { case (c, vs) =>
-      partFileMatches(snap, f, c, vs, includeNull) })
-  }
-
-  /** Multi-column partition × stat-range pruning in ONE snapshot
-    * resolution: files must match every partition spec AND every stat
-    * range conjunct, exact predicates re-applied — identical answers to
-    * the unpruned read, at (matching partitions across all columns) ×
-    * (matching ranges) scan cost.
-    */
-  def readPartitionRangePrunedMulti(s: SparkSession, root: String,
-      partSpecs: Seq[(String, Seq[String])],
-      preds: Seq[(String, Double, Double)]): DataFrame = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    val files = snap.files
-      .filter(f => partSpecs.forall { case (c, vs) =>
-        partFileMatches(snap, f, c, vs.toSet, includeNull = false) })
-      .filter { f =>
-        val ranges = snap.stats.getOrElse(f, Seq.empty)
-        preds.forall { case (colName, lo, hi) =>
-          ranges.find(r => namesOf(snap, colName).contains(r._1)) match {
-            case Some((_, mn, mx, _)) => mx >= lo && mn <= hi
-            case None => true
-          }
-        }
-      }
-    val df =
-      if (files.isEmpty) readSnapshot(s, root, snap).limit(0)
-      else readFilesWithDvs(s, root, snap, files)
-    val partFiltered = partSpecs.foldLeft(df) { case (d, (c, vs)) =>
-      d.filter(col(c).isInCollection(vs)) }
-    preds.foldLeft(partFiltered) {
-      case (d, (c, lo, hi)) => d.filter(col(c) >= lo && col(c) <= hi)
-    }
-  }
-
-  /** Partition-pruned read: manifest-level file selection on the
-    * recorded partition values, then the exact predicate re-applied —
-    * identical to `read(...).filter(col isin values)` whatever the
-    * part lines say. The hive-partitioning read path, with the values
-    * resolved from ONE snapshot (no prune/read version skew).
-    */
-  def readPartitionPruned(s: SparkSession, root: String, colName: String,
-      values: Seq[String]): DataFrame = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    val files = partPrunedOf(snap, colName, values.toSet, includeNull = false)
-    val df =
-      if (files.isEmpty) readSnapshot(s, root, snap).limit(0)
-      else readFilesWithDvs(s, root, snap, files)
-    df.filter(col(colName).isInCollection(values))
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.types.DoubleType
+    new graft.sources.TxFileIndex(root, snap).prunedFiles(preds.flatMap {
+      case (c, lo, hi) =>
+        val a = AttributeReference(c, DoubleType)()
+        Seq(GreaterThanOrEqual(a, Literal(lo)),
+          LessThanOrEqual(a, Literal(hi)))
+    })
   }
 
   /** Dynamic partition overwrite (Delta's `partitionOverwriteMode =
@@ -2790,39 +2572,6 @@ object TxTable {
     rows.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
       .map { case (v, n) => (v.orNull, n) }
       .toDF(colName, "n_rows")
-  }
-
-  /** Combined partition + stat pruning: manifest-level file selection
-    * on BOTH the recorded partition value (`partCol ∈ values`) and the
-    * footer stat ranges (`lo <= col <= hi` conjuncts), exact predicates
-    * re-applied. The two dimensions MULTIPLY: a lang-partitioned,
-    * within-partition range-clustered layout (repartitionByRange on
-    * (partCol, statCol) before a `commit(partitionBy, statsCols)`)
-    * prunes to (matching partitions) × (matching ranges) — the standard
-    * partition-plus-Z-order lakehouse read path. One snapshot
-    * resolution for prune and read (no version skew).
-    */
-  def readPartitionRangePruned(s: SparkSession, root: String,
-      partCol: String, values: Seq[String],
-      preds: Seq[(String, Double, Double)]): DataFrame = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new java.io.IOException(s"txtable $root has no committed version"))
-    val files = partPrunedOf(snap, partCol, values.toSet,
-      includeNull = false).filter { f =>
-      val ranges = snap.stats.getOrElse(f, Seq.empty)
-      preds.forall { case (colName, lo, hi) =>
-        ranges.find(r => namesOf(snap, colName).contains(r._1)) match {
-          case Some((_, mn, mx, _)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    }
-    val df =
-      if (files.isEmpty) readSnapshot(s, root, snap).limit(0)
-      else readFilesWithDvs(s, root, snap, files)
-    preds.foldLeft(df.filter(col(partCol).isInCollection(values))) {
-      case (d, (c, lo, hi)) => d.filter(col(c) >= lo && col(c) <= hi)
-    }
   }
 
   /** Serializable MERGE (update matched by `keys`, insert new): recomputes
@@ -3304,15 +3053,7 @@ object TxTable {
     while (committed < 0) {
       val parent = currentSnapshot(root).getOrElse(throw new
           java.io.IOException(s"txtable $root has no version to delete from"))
-      val cand = parent.files.filter { f =>
-        val ranges = parent.stats.getOrElse(f, Seq.empty)
-        prune.forall { case (c, lo, hi) =>
-          ranges.find(l => namesOf(parent, c).contains(l._1)) match {
-            case Some((_, mn, mx, _)) => mx >= lo && mn <= hi
-            case None => true
-          }
-        }
-      }
+      val cand = statPrunedFiles(root, parent, prune)
       if (cand.isEmpty) return parent.version
       val scan = attachLogical(parent,
         readDataFiles(s, parent, cand.map(f => absFile(root, f))))
@@ -3413,15 +3154,7 @@ object TxTable {
     while (committed < 0) {
       val parent = currentSnapshot(root).getOrElse(throw new
           java.io.IOException(s"txtable $root has no version to update"))
-      val cand = parent.files.filter { f =>
-        val ranges = parent.stats.getOrElse(f, Seq.empty)
-        prune.forall { case (c, lo, hi) =>
-          ranges.find(l => namesOf(parent, c).contains(l._1)) match {
-            case Some((_, mn, mx, _)) => mx >= lo && mn <= hi
-            case None => true
-          }
-        }
-      }
+      val cand = statPrunedFiles(root, parent, prune)
       if (cand.isEmpty) return parent.version
       val scan = attachLogical(parent,
         readDataFiles(s, parent, cand.map(f => absFile(root, f))))
@@ -3783,7 +3516,7 @@ object TxTable {
     * expression — q110's layout lever, here driving the TRANSACTIONAL
     * layout) and record per-file footer stats on BOTH source columns.
     * Because Morton order alternates x/y bits, each file covers a small
-    * rectangle in (x, y) space, so [[readPrunedMulti]] skips files for a
+    * rectangle in (x, y) space, so a `format("tx")` scan skips files for a
     * predicate on EITHER dimension — the property a 1-D sort cannot give.
     * Clustering changes only file assignment; stats are read back from
     * the actual footers, so the range-shuffle's sampled boundaries are
@@ -3799,7 +3532,7 @@ object TxTable {
     * the N-D Morton interleave ([[graft.functions.matching.zorder_n]],
     * `63/n` bits per dimension), recording per-file footer stats on ALL
     * clustering columns. Each file covers a small N-box in the
-    * clustering space, so [[readPrunedMulti]] skips files for a range
+    * clustering space, so a `format("tx")` scan skips files for a range
     * predicate on ANY axis, and an N-way conjunction prunes at most as
     * many files as its tightest axis (TxTableSpec pins conjunction ≤
     * every 1-D pruning on a 3-D grid). Delta's multi-column `ZORDER BY`
@@ -4579,8 +4312,8 @@ object TxTable {
        |ORDER BY o_custkey""".stripMargin
 
   /** Data-skipping read: orders published range-clustered on
-    * `o_totalprice`, then a selective range aggregate over
-    * [[readPruned]] — the manifest's footer stats drop the files whose
+    * `o_totalprice`, then a selective range aggregate through
+    * `format("tx")` — the manifest's footer stats drop the files whose
     * range misses (TxTableSpec proves the pruning; the oracle proves the
     * answer is exactly the plain filter's).
     */
@@ -4591,7 +4324,8 @@ object TxTable {
     commit(s, root, graft.Tables.orders(s, d)
         .select("o_orderkey", "o_orderpriority", "o_totalprice"),
       Overwrite, clusterBy = Some("o_totalprice"))
-    val out = readPruned(s, root, "o_totalprice", 50000.0, 100000.0)
+    val out = s.read.format("tx").load(root)
+      .filter(col("o_totalprice").between(50000.0, 100000.0))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_price"))
@@ -4616,10 +4350,10 @@ object TxTable {
   /** Hive-partitioned table: documents published partitioned by `lang`
     * (the language-sharded corpus layout every training pipeline uses),
     * a second batch APPENDED partitioned the same way (part lines
-    * merge), then a two-language aggregate over
-    * [[readPartitionPruned]] — manifest-level file selection with the
-    * exact predicate re-applied (TxTableSpec proves the pruning; the
-    * oracle proves the answer is exactly the plain filter's).
+    * merge), then a two-language aggregate through `format("tx")` —
+    * manifest-level file selection with the exact predicate re-applied
+    * (TxTableSpec proves the pruning; the oracle proves the answer is
+    * exactly the plain filter's).
     */
   def q185TxPartition(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4634,7 +4368,8 @@ object TxTable {
       graft.Tables.documents(s, d).filter(col("doc_id") % 2 === 1)
         .select(cols.map(col): _*),
       Append, partitionBy = Some("lang"))
-    val out = readPartitionPruned(s, root, "lang", Seq("en", "fr"))
+    val out = s.read.format("tx").load(root)
+      .filter(col("lang").isin("en", "fr"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
       .orderBy("lang")
@@ -4673,8 +4408,8 @@ object TxTable {
       mkFold = (_, _) => (batch, batchId) =>
         streamAppendPartitioned(root, "q191", "lang")(batch, batchId),
       readResult = (ss, _) => {
-        val scanned = readPartitionPruned(ss, root, "lang",
-          Seq("en", "zh"))
+        val scanned = ss.read.format("tx").load(root)
+          .filter(col("lang").isin("en", "zh"))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum("n_chars").as("total_chars"))
@@ -4703,10 +4438,10 @@ object TxTable {
     * (lang, n_chars) BEFORE a partitioned commit with n_chars stats —
     * the writer shuffles nothing, so each file lands with one lang and
     * a tight n_chars range — then a two-dimensional pruned read
-    * (lang ∈ {en, fr}, n_chars ∈ [200, 400]) through
-    * [[readPartitionRangePruned]]. TxTableSpec proves the prune
-    * multiplies (fewer files than either dimension alone); the oracle
-    * proves the answer is exactly the plain filter's.
+    * (lang ∈ {en, fr}, n_chars ∈ [200, 400]) through `format("tx")`.
+    * TxTableSpec proves the prune multiplies (fewer files than either
+    * dimension alone); the oracle proves the answer is exactly the plain
+    * filter's.
     */
   def q192TxPartitionRange(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4717,8 +4452,9 @@ object TxTable {
       graft.Tables.documents(s, d).select(cols.map(col): _*)
         .repartitionByRange(8, col("lang"), col("n_chars")),
       Overwrite, partitionBy = Some("lang"), statsCols = Seq("n_chars"))
-    val out = readPartitionRangePruned(s, root, "lang", Seq("en", "fr"),
-      Seq(("n_chars", 200.0, 400.0)))
+    val out = s.read.format("tx").load(root)
+      .filter(col("lang").isin("en", "fr") &&
+        col("n_chars").between(200, 400))
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("lang", "source")
@@ -4738,10 +4474,10 @@ object TxTable {
     * `lang` alone) swapping the whole recomputed 'en' slice across all
     * sources. The read is three pruning dimensions multiplied — lang ∈
     * {de,en,fr} × source ∈ {src1,src3,src5} × n_chars ∈ [250, 900] —
-    * through [[readPartitionRangePrunedMulti]] (TxTableSpec pins the
-    * pruned file set); the oracle restates the two dpo memberships in
-    * SQL, including the batch-empty guard full-spec dpo semantics
-    * demand (a cell absent from the batch is NOT replaced).
+    * through `format("tx")` (TxTableSpec pins the pruned file set); the
+    * oracle restates the two dpo memberships in SQL, including the
+    * batch-empty guard full-spec dpo semantics demand (a cell absent
+    * from the batch is NOT replaced).
     */
   def q197TxPartition2(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4764,10 +4500,10 @@ object TxTable {
     overwritePartitionsMulti(s, root,
       docs.filter(col("lang") === "en" && col("n_chars") >= 200),
       Seq("lang"))
-    val out = readPartitionRangePrunedMulti(s, root,
-      Seq(("lang", Seq("de", "en", "fr")),
-        ("source", Seq("src1", "src3", "src5"))),
-      Seq(("n_chars", 250.0, 900.0)))
+    val out = s.read.format("tx").load(root)
+      .filter(col("lang").isin("de", "en", "fr") &&
+        col("source").isin("src1", "src3", "src5") &&
+        col("n_chars").between(250, 900))
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_chars").cast("long").as("total_chars"))

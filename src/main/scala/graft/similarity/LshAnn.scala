@@ -206,9 +206,9 @@ object LshAnn {
     * range-clustered tight on the composite cell id
     * `band · 2^BBits + bucket`, with per-file footer (min, max) cell
     * ranges in the manifest; a single query's ≤ [[NBands]] cells then
-    * prune the manifest by DISJUNCTION ([[TxTable.prunedFilesAny]] — the
-    * IN-list skipping form) and the lookup reads ONLY the files whose
-    * recorded cell range can hold one of them. At the spec layout (64
+    * prune the manifest by DISJUNCTION (a pushed `cell IN (...)` through
+    * `format("tx")`) and the lookup reads ONLY the files whose recorded
+    * cell range can hold one of them. At the spec layout (64
     * range-tight files over 2048 cells) a point query reads ≤ 8 of 64
     * files — the at-scale story: an ANN serving lookup against a 100 TB
     * index is a few band-local file reads resolved from manifest stats,
@@ -243,11 +243,8 @@ object LshAnn {
       .withColumn("cell", cellOf)
     val cells = qb.select("cell").distinct().collect()
       .map(_.getLong(0)).sorted.toSeq
-    val files = TxTable.prunedFilesAny(root, "cell",
-      cells.map(c => (c.toDouble, c.toDouble)))
-    val nAll = TxTable.currentSnapshot(root).get.files.size
-    val idx = s.read.option("mergeSchema", "true")
-      .parquet(files.map(f => TxTable.absFile(root, f)): _*)
+    val idx = s.read.format("tx").load(root)
+      .filter(col("cell").isin(cells: _*))
     // the exact cell equi-join IS the re-applied predicate; from here the
     // ranking is expression-identical to annLshOn's (same rounding, same
     // total order), so the result must equal q157's qid-0 rows
@@ -262,8 +259,16 @@ object LshAnn {
       .select("qid", "vec_id", "cos_sim", "rn")
       .orderBy("qid", "rn")
       .localCheckpoint(true)
+    // the skipping evidence is the file set the executed scan kept
+    val kept = idx.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if l.relation.isInstanceOf[graft.sources.TxBatchRelation] =>
+        l.relation.asInstanceOf[graft.sources.TxBatchRelation].index
+    }.flatMap(_.lastPruned).getOrElse(throw new IllegalStateException(
+      "q171: the lookup never planned a TxFileIndex scan"))
+    val nAll = TxTable.currentSnapshot(root).get.files.size
     graft.streaming.Replay.deleteRecursively(tmp)
-    (out, files.size, nAll)
+    (out, kept.size, nAll)
   }
 
   val q171Sql: String =

@@ -15,9 +15,9 @@ import graft.operators.TxTable
   * a `WHERE` clause provably cannot touch never reach scan planning.
   *
   * This is the Delta/Iceberg integration shape (a log-backed FileIndex
-  * under a parquet `HadoopFsRelation`): the skipping that previously
-  * required the bespoke `TxTable.readPruned*` calls now falls out of a
-  * plain `spark.read.format("tx").load(root).filter(...)` — Catalyst
+  * under a parquet `HadoopFsRelation`), and graft's ONE manifest-pruning
+  * path: skipping falls out of a plain
+  * `spark.read.format("tx").load(root).filter(...)` — Catalyst
   * pushes the predicates, this index prunes on them at PLANNING time,
   * and the surviving files take Spark's native vectorized parquet scan
   * (whole-stage codegen, parquet row-group pushdown, column pruning all
@@ -25,11 +25,11 @@ import graft.operators.TxTable
   * kilobytes of manifest instead of listing and footer-probing 10⁵
   * files, and a selective query plans only the files that can matter.
   *
-  * Pruning contract (same as every TxTable prune path): DEGRADE, NEVER
-  * LIE. A file missing metadata on a predicate column survives; an
-  * expression shape the translator doesn't recognize keeps every file;
-  * the exact predicate always re-applies inside the scan, so skipping
-  * only ever removes provably-dead I/O.
+  * Pruning contract: DEGRADE, NEVER LIE. A file missing metadata on a
+  * predicate column survives; an expression shape the translator
+  * doesn't recognize keeps every file; the exact predicate always
+  * re-applies inside the scan, so skipping only ever removes
+  * provably-dead I/O.
   *
   * `partitionBy` selects between the index's two postures:
   *
@@ -228,9 +228,10 @@ final class TxFileIndex(root: String, snap0: TxTable.Snapshot,
           BoundReference(i, partitionBy(i).dataType, nullable = true)
       }))
 
-  /** The pruned file set for a predicate list — the spec seam (asserts
-    * pin exactly which files a filter keeps) and the testable core of
-    * [[listFiles]]. Root-relative paths, manifest order.
+  /** The pruned file set for a predicate list — the testable core of
+    * [[listFiles]], and the entry every other manifest prune goes through
+    * (`TxTable.statPrunedFiles`, the z-order demos' skip guards, lab
+    * probes). Root-relative paths, manifest order.
     */
   def prunedFiles(dataFilters: Seq[Expression]): Seq[String] =
     snap.files.filter(f => dataFilters.forall(mayMatch(f, _)))
@@ -507,10 +508,10 @@ final class TxFileIndex(root: String, snap0: TxTable.Snapshot,
     * conjunction; the bloom check batches EVERY value's probes into one
     * bitset walk per file — one Base64 decode per file instead of one
     * per (file × value), the dominant driver-side planning term for an
-    * IN list over a large head. That is `prunedFilesIn`'s bloom-any
-    * semantics: conservative vs the per-value conjunction only when one
-    * value passes the bloom while a DIFFERENT value passes the stats —
-    * it never prunes a file the exact semantics would keep. Any
+    * IN list over a large head. This bloom-any form is conservative vs
+    * the per-value conjunction only when one value passes the bloom
+    * while a DIFFERENT value passes the stats — it never prunes a file
+    * the exact semantics would keep. Any
     * unprobeable value (null element, non-literal) disables the bloom
     * step for the whole list (that value alone could match anywhere).
     */

@@ -139,17 +139,8 @@ object TxState {
     */
   private[graft] def prunedStateFiles(root: String, beforeBatch: Long,
       preds: Seq[(String, Double, Double)]): Seq[String] =
-    resolveBefore(root, beforeBatch).toSeq.flatMap { snap =>
-      snap.files.filter { f =>
-        val ranges = snap.stats.getOrElse(f, Seq.empty)
-        preds.forall { case (c, lo, hi) =>
-          ranges.find(_._1 == c) match {
-            case Some((_, mn, mx, _)) => mx >= lo && mn <= hi
-            case None => true
-          }
-        }
-      }
-    }
+    resolveBefore(root, beforeBatch).toSeq.flatMap(
+      TxTable.statPrunedFiles(root, _, preds))
 
   /** Rows of history visible to `beforeBatch` — summed from the
     * manifest's per-file `rows` lines (recorded at commit time), with a

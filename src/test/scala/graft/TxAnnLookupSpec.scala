@@ -14,7 +14,7 @@ class TxAnnLookupSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val d = "/root/testdata/sf0.001"
 
-  test("prunedFilesAny: disjunction skips range-disjoint files only") {
+  test("isin disjunction skips range-disjoint files only") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_txany_")
     try {
@@ -26,15 +26,13 @@ class TxAnnLookupSpec extends AnyFunSuite {
       val all = TxTable.currentSnapshot(root).get.files.size
       assert(all == 8)
       // two point cells in distinct ~80-cell files → exactly 2 survive
-      val two = TxTable.prunedFilesAny(root, "cell",
-        Seq((5.0, 5.0), (600.0, 600.0)))
+      val two = TxPrune.files(spark, root, col("cell").isin(5L, 600L))
       assert(two.size == 2, s"expected 2 surviving files, got ${two.size}")
       // a range spanning everything keeps everything
-      assert(TxTable.prunedFilesAny(root, "cell",
-        Seq((0.0, 1000.0))).size == all)
+      assert(TxPrune.files(spark, root, col("cell").between(0, 1000))
+        .size == all)
       // stats on another column never prune
-      assert(TxTable.prunedFilesAny(root, "id",
-        Seq((5.0, 5.0))).size == all)
+      assert(TxPrune.files(spark, root, col("id").isin(5L)).size == all)
     } finally graft.streaming.Replay.deleteRecursively(tmp)
   }
 

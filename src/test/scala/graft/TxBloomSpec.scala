@@ -3,12 +3,15 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TxTable
 
 /** Per-file bloom-filter skipping ([[TxTable.commit]]'s `bloomCols` →
-  * [[TxTable.prunedFilesIn]] / [[TxTable.readPrunedIn]]): point lookups
-  * on a column the clustering does NOT serve. Pins the two contracts
+  * [[TxTable.bloomMayContainAny]], applied by a pushed equality/IN on a
+  * `format("tx")` read): point lookups on a column the clustering does
+  * NOT serve. File-set assertions probe the bloom mechanism alone, so
+  * the index's stat pruning can never stand in for it. Pins the two contracts
   * that matter — NO FALSE NEGATIVES (every present value's file
   * survives pruning: the probe evaluates the same catalyst xxhash64
   * family the build ran) and real skipping (a value in one file prunes
@@ -35,11 +38,26 @@ class TxBloomSpec extends AnyFunSuite {
     ()
   }
 
+  /** Files whose bloom on `c` might hold a probed value — the bloom
+    * mechanism in isolation.
+    */
+  private def bloomKept(root: String, c: String,
+      probes: Seq[(Long, Long)]): Seq[String] = {
+    val snap = TxTable.currentSnapshot(root).get
+    snap.files.filter(TxTable.bloomMayContainAny(snap, _, c, probes))
+  }
+
+  private def strProbes(values: String*): Seq[(Long, Long)] =
+    TxTable.bloomProbesStr(values.map(UTF8String.fromString))
+
+  private def lookup(root: String, c: String, values: Any*) =
+    spark.read.format("tx").load(root).filter(col(c).isin(values: _*))
+
   test("no false negatives: every probed present value reads complete") {
     withRoot { root =>
       seed(root)
       val values = Seq(1L, 500L, 996L, 0L)
-      val got = TxTable.readPrunedIn(spark, root, "probe", values)
+      val got = lookup(root, "probe", values: _*)
         .select("id").collect().map(_.getLong(0)).toSet
       val expected = (1 to 4000).filter(i => values.contains((i % 997).toLong))
         .map(_.toLong).toSet
@@ -56,13 +74,12 @@ class TxBloomSpec extends AnyFunSuite {
         bloomCols = Seq("id"))
       val snap = TxTable.currentSnapshot(root).get
       assert(snap.files.size >= 4, "need several files for skipping to show")
-      val surviving = TxTable.prunedFilesIn(root, "id", Seq(17L))
+      val surviving = bloomKept(root, "id", TxTable.bloomProbes(Seq(17L)))
       // id=17 truly lives in exactly one file; fp rate ~0.5% at 16
       // bits/row — a majority of the files must prune
       assert(surviving.size <= math.max(2, snap.files.size / 2),
         s"bloom pruned nothing: ${surviving.size} of ${snap.files.size}")
-      assert(TxTable.readPrunedIn(spark, root, "id", Seq(17L))
-        .count() == 1L)
+      assert(lookup(root, "id", 17L).count() == 1L)
     }
   }
 
@@ -79,7 +96,7 @@ class TxBloomSpec extends AnyFunSuite {
       val snap = TxTable.currentSnapshot(root).get
       // the id-clustered tail file holds only null probes -> no bloom
       assert(snap.blooms.size < snap.files.size)
-      val got = TxTable.readPrunedIn(spark, root, "probe", Seq(7L))
+      val got = lookup(root, "probe", 7L)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(got == (1 to 100).filter(_ % 10 == 7).map(_.toLong).toSet)
     }
@@ -88,10 +105,9 @@ class TxBloomSpec extends AnyFunSuite {
   test("a column without blooms never prunes; absent values read empty") {
     withRoot { root =>
       seed(root)
-      assert(TxTable.prunedFilesIn(root, "id", Seq(1L)).size ==
+      assert(bloomKept(root, "id", TxTable.bloomProbes(Seq(1L))).size ==
         TxTable.currentSnapshot(root).get.files.size)
-      assert(TxTable.readPrunedIn(spark, root, "probe", Seq(5000L))
-        .count() == 0L)
+      assert(lookup(root, "probe", 5000L).count() == 0L)
     }
   }
 
@@ -102,7 +118,7 @@ class TxBloomSpec extends AnyFunSuite {
       TxTable.commit(spark, root,
         Seq((9001L, 998L, "x")).toDF("id", "probe", "s"),
         TxTable.Append, bloomCols = Seq("probe"))
-      val got = TxTable.readPrunedIn(spark, root, "probe", Seq(998L, 1L))
+      val got = lookup(root, "probe", 998L, 1L)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(got.contains(9001L) && got.contains(1L))
       // the appended single-row file must prune away for an old value
@@ -116,7 +132,7 @@ class TxBloomSpec extends AnyFunSuite {
     withRoot { root =>
       seed(root)
       TxTable.deleteWhere(spark, root, col("id") === 997L) // probe 0
-      val got = TxTable.readPrunedIn(spark, root, "probe", Seq(0L))
+      val got = lookup(root, "probe", 0L)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(!got.contains(997L) && got.contains(1994L))
     }
@@ -145,7 +161,7 @@ class TxBloomSpec extends AnyFunSuite {
       seedStr(root)
       val values = Seq(s"user-${7L * 2654435761L}", "naïve-😀-1000",
         s"user-${3999L * 2654435761L}")
-      val got = TxTable.readPrunedInStr(spark, root, "name", values)
+      val got = lookup(root, "name", values: _*)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(got == Set(7L, 1000L, 3999L))
     }
@@ -158,16 +174,14 @@ class TxBloomSpec extends AnyFunSuite {
       val snap = TxTable.currentSnapshot(root).get
       assert(snap.files.size >= 4, "need several files for skipping to show")
       val one = s"user-${17L * 2654435761L}"
-      val surviving = TxTable.prunedFilesInStr(root, "name", Seq(one))
+      val surviving = bloomKept(root, "name", strProbes(one))
       assert(surviving.size <= math.max(2, snap.files.size / 2),
         s"string bloom pruned nothing: ${surviving.size} of ${snap.files.size}")
-      assert(TxTable.readPrunedInStr(spark, root, "name", Seq(one))
-        .count() == 1L)
-      assert(TxTable.readPrunedInStr(spark, root, "name", Seq("no-such"))
-        .count() == 0L)
+      assert(lookup(root, "name", one).count() == 1L)
+      assert(lookup(root, "name", "no-such").count() == 0L)
       // id carries no bloom: a string-probe of it can't apply, and the
       // integral path keeps every file too
-      assert(TxTable.prunedFilesIn(root, "id", Seq(1L)).size ==
+      assert(bloomKept(root, "id", TxTable.bloomProbes(Seq(1L))).size ==
         snap.files.size)
     }
   }
@@ -201,11 +215,10 @@ class TxBloomSpec extends AnyFunSuite {
       TxTable.renameColumn(spark, root, "name", "handle")
       val one = s"user-${42L * 2654435761L}"
       val snap = TxTable.currentSnapshot(root).get
-      val surviving = TxTable.prunedFilesInStr(root, "handle", Seq(one))
+      val surviving = bloomKept(root, "handle", strProbes(one))
       assert(surviving.size < snap.files.size,
         "renamed probe did not reach the write-time bloom lines")
-      assert(TxTable.readPrunedInStr(spark, root, "handle", Seq(one))
-        .count() == 1L)
+      assert(lookup(root, "handle", one).count() == 1L)
     }
   }
 
@@ -231,7 +244,7 @@ class TxBloomSpec extends AnyFunSuite {
       val snap = TxTable.currentSnapshot(root).get
       // rewritten file(s) have no bloom -> never pruned -> still read
       assert(snap.blooms.size < snap.files.size)
-      val got = TxTable.readPrunedIn(spark, root, "probe", Seq(500L))
+      val got = lookup(root, "probe", 500L)
         .select("id", "probe").collect().map(_.getLong(0)).toSet
       assert(got.contains(1L) && got.contains(500L + 997L))
     }

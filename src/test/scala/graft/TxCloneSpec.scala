@@ -180,7 +180,7 @@ class TxCloneSpec extends AnyFunSuite {
     withRoots { (src, tgt) =>
       TxTable.commit(spark, src, df(spark, 0, 1000), clusterBy = Some("k"))
       TxTable.clone(spark, src, tgt)
-      val pruned = TxTable.prunedFiles(tgt, "k", 0d, 10d)
+      val pruned = TxPrune.files(spark, tgt, col("k").between(0, 10))
       val all = TxTable.currentSnapshot(tgt).get.files
       assert(pruned.size < all.size, "carried stat lines must prune")
       assert(TxTable.fsck(spark, tgt).isEmpty)

@@ -68,10 +68,11 @@ class TxColumnMapSpec extends AnyFunSuite {
         TxTable.Overwrite, clusterBy = Some("x"))
       TxTable.renameColumn(spark, root, "x", "chars")
       // pruning by the NEW name consults the OLD name's stat lines
-      val pruned = TxTable.prunedFiles(root, "chars", 10.0, 60.0)
+      val pruned = TxPrune.files(spark, root, col("chars").between(10, 60))
       assert(pruned.nonEmpty &&
         pruned.size < TxTable.currentSnapshot(root).get.files.size)
-      val got = TxTable.readPruned(spark, root, "chars", 10.0, 60.0)
+      val got = spark.read.format("tx").load(root)
+        .filter(col("chars").between(10, 60))
         .select("id").collect().map(_.getLong(0)).toSet
       assert(got == (1L to 6L).toSet)
       // MoR delete by the new name, then CDF classification
@@ -227,8 +228,8 @@ class TxColumnMapSpec extends AnyFunSuite {
         TxTable.Append, partitionBy = Some("language"))
       assert(TxTable.read(spark, root).count() == 13L)
       // 3. manifest partition pruning matches across vintages
-      val pruned = TxTable.partPrunedFilesMulti(root,
-        Seq(("language", Set("zh", "fr"))))
+      val pruned = TxPrune.files(spark, root,
+        col("language").isin("zh", "fr"))
       val snap = TxTable.currentSnapshot(root).get
       assert(pruned.size < snap.files.size && pruned.nonEmpty)
       // 4. zero-scan partition stats group across both name vintages

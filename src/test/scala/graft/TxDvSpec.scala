@@ -1,8 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TxTable
 
@@ -183,22 +190,80 @@ class TxDvSpec extends AnyFunSuite {
     }
   }
 
+  /** The head's files whose recorded id range meets [lo, hi] — the
+    * ground truth a `prune = Seq(("id", lo, hi))` scan must plan.
+    */
+  private def idRangeFiles(root: String, lo: Double,
+      hi: Double): Set[String] = {
+    val snap = TxTable.currentSnapshot(root).get
+    snap.files.filter { f =>
+      snap.stats(f).find(_._1 == "id").exists { case (_, mn, mx, _) =>
+        mx >= lo && mn <= hi }
+    }.toSet
+  }
+
+  /** Which of `root`'s snapshot files the queries run by `body` actually
+    * scanned, read off every executed plan's file scans — a silently
+    * lost prune shows up here as extra files even when answers stay
+    * right.
+    */
+  private def scannedFiles(root: String)(body: => Unit): Set[String] = {
+    val snapFiles = TxTable.currentSnapshot(root).get.files
+    val byPath = snapFiles.map(f =>
+      new Path(TxTable.absFile(root, f)).toUri.getPath -> f).toMap
+    val seen = ConcurrentHashMap.newKeySet[String]()
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(fn: String, qe: QueryExecution,
+          ns: Long): Unit =
+        collect(qe.executedPlan) { case f: FileSourceScanExec => f }
+          .foreach(_.relation.location.inputFiles.foreach(seen.add))
+      override def onFailure(fn: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.flatMap(p => byPath.get(new Path(p).toUri.getPath)).toSet
+  }
+
   test("prune conjuncts narrow the delete scan to stat-intersecting files") {
     withRoot { root =>
       seed(root)
       val snap = TxTable.currentSnapshot(root).get
       // clusterBy id wrote 8 range-tight files; a delete pruned to a
-      // narrow id range must only record DVs against files in range
-      TxTable.deleteWhere(spark, root, col("id").between(1, 5),
-        prune = Seq(("id", 1.0, 5.0)))
-      val after = TxTable.currentSnapshot(root).get
-      val touched = after.dvs.keySet
-      val inRange = snap.files.filter { f =>
-        snap.stats(f).find(_._1 == "id").exists { case (_, mn, mx, _) =>
-          mx >= 1.0 && mn <= 5.0 }
-      }.toSet
+      // narrow id range must scan, and record DVs against, only the
+      // files whose stats meet the range
+      val inRange = idRangeFiles(root, 1.0, 5.0)
+      assert(inRange.nonEmpty && inRange.size < snap.files.size)
+      val scanned = scannedFiles(root) {
+        TxTable.deleteWhere(spark, root, col("id").between(1, 5),
+          prune = Seq(("id", 1.0, 5.0)))
+      }
+      assert(scanned == inRange)
+      val touched = TxTable.currentSnapshot(root).get.dvs.keySet
       assert(touched.subsetOf(inRange) && touched.nonEmpty)
       assert(ids(root) == (6L to 40L).toSet)
+    }
+  }
+
+  test("prune conjuncts narrow the update scan to stat-intersecting files") {
+    withRoot { root =>
+      seed(root)
+      val snap = TxTable.currentSnapshot(root).get
+      val inRange = idRangeFiles(root, 12.0, 22.0)
+      assert(inRange.size > 1 && inRange.size < snap.files.size)
+      val scanned = scannedFiles(root) {
+        TxTable.updateWhere(spark, root, col("id").between(12, 22),
+          Seq("s" -> lit("u")), prune = Seq(("id", 12.0, 22.0)))
+      }
+      assert(scanned == inRange)
+      assert(TxTable.currentSnapshot(root).get.dvs.keySet.subsetOf(inRange))
+      val rows = TxTable.read(spark, root).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(rows.size == 40 && (1L to 40L).forall(i =>
+        rows(i) == (if (i >= 12 && i <= 22) "u" else s"s$i")))
     }
   }
 
@@ -258,11 +323,12 @@ class TxDvSpec extends AnyFunSuite {
     }
   }
 
-  test("readPruned applies DVs on the pruned subset") {
+  test("pruned format(tx) read applies DVs on the pruned subset") {
     withRoot { root =>
       seed(root)
       TxTable.deleteWhere(spark, root, col("id") === 3)
-      val got = TxTable.readPruned(spark, root, "id", 1.0, 10.0)
+      val got = spark.read.format("tx").load(root)
+        .filter(col("id").between(1, 10))
         .select("id").collect().map(_.getLong(0)).toSet
       assert(got == (1L to 10L).toSet - 3L)
     }

@@ -216,24 +216,26 @@ class TxTableSpec extends AnyFunSuite {
       assert(snap.stats.keySet == snap.files.toSet,
         "every clustered file should carry stats")
       // a selective range must prune most range-clustered files...
-      val pruned = TxTable.prunedFiles(root, "v", 100.0, 200.0)
+      val pruned = TxPrune.files(spark, root, col("v").between(100.0, 200.0))
       assert(pruned.size < snap.files.size,
         s"no pruning: ${pruned.size} of ${snap.files.size}")
       // ...and the pruned read must equal the full filtered read exactly
-      val got = TxTable.readPruned(spark, root, "v", 100.0, 200.0)
+      val got = spark.read.format("tx").load(root)
+        .filter(col("v").between(100.0, 200.0))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       val full = TxTable.read(spark, root)
         .filter(col("v") >= 100.0 && col("v") <= 200.0)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(got == full && got.size == 11)
       // stats on an unrelated column never prune
-      assert(TxTable.prunedFiles(root, "id", 100.0, 200.0).size
+      assert(TxPrune.files(spark, root, col("id").between(100, 200)).size
         == snap.files.size)
       // append WITHOUT clustering: new files carry no stats, survive all
       // pruning, parent stats persist
       TxTable.commit(spark, root, Seq((9001L, 150.0)).toDF("id", "v"),
         TxTable.Append)
-      val got2 = TxTable.readPruned(spark, root, "v", 100.0, 200.0)
+      val got2 = spark.read.format("tx").load(root)
+        .filter(col("v").between(100.0, 200.0))
         .collect().map(_.getLong(0)).toSet
       assert(got2 == full.map(_._1) + 9001L)
     }
@@ -297,7 +299,7 @@ class TxTableSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getDouble(1))).toSet == preRows)
       // and the re-clustered layout actually prunes now: v spans 10..4000,
       // so a [0, 100] probe can only live in the low file
-      assert(TxTable.prunedFiles(root, "v", 0.0, 100.0).size == 1)
+      assert(TxPrune.files(spark, root, col("v").between(0.0, 100.0)).size == 1)
     }
   }
 
@@ -335,16 +337,16 @@ class TxTableSpec extends AnyFunSuite {
       assert(snap.stats.values.forall(_.map(_._1).toSet == Set("x", "y")),
         "every file should carry stats on BOTH dimensions")
       val all = snap.files.size
-      val px = TxTable.prunedFilesMulti(root, Seq(("x", 0.0, 15.0))).size
-      val py = TxTable.prunedFilesMulti(root, Seq(("y", 0.0, 15.0))).size
-      val pxy = TxTable.prunedFilesMulti(root,
-        Seq(("x", 0.0, 15.0), ("y", 0.0, 15.0))).size
+      val px = TxPrune.files(spark, root, col("x").between(0, 15)).size
+      val py = TxPrune.files(spark, root, col("y").between(0, 15)).size
+      val pxy = TxPrune.files(spark, root,
+        col("x").between(0, 15) && col("y").between(0, 15)).size
       assert(px < all, "x-range pruned nothing — not a 2-D layout")
       assert(py < all, "y-range pruned nothing — a 1-D sort would fail this")
       assert(pxy <= math.min(px, py),
         s"conjunction ($pxy) should not exceed either 1-D pruning ($px, $py)")
-      val got = TxTable.readPrunedMulti(spark, root,
-        Seq(("x", 0.0, 15.0), ("y", 0.0, 15.0)))
+      val got = spark.read.format("tx").load(root)
+        .filter(col("x").between(0, 15) && col("y").between(0, 15))
         .collect().map(_.getAs[Long]("id")).toSet
       val full = TxTable.read(spark, root)
         .filter(col("x") <= 15 && col("y") <= 15)
@@ -368,19 +370,20 @@ class TxTableSpec extends AnyFunSuite {
       assert(snap.stats.values.forall(_.map(_._1).toSet == Set("x", "y", "z")),
         "every file should carry stats on ALL THREE dimensions")
       val all = snap.files.size
-      val px = TxTable.prunedFilesMulti(root, Seq(("x", 0.0, 3.0))).size
-      val py = TxTable.prunedFilesMulti(root, Seq(("y", 0.0, 3.0))).size
-      val pz = TxTable.prunedFilesMulti(root, Seq(("z", 0.0, 3.0))).size
-      val pxyz = TxTable.prunedFilesMulti(root,
-        Seq(("x", 0.0, 3.0), ("y", 0.0, 3.0), ("z", 0.0, 3.0))).size
+      val px = TxPrune.files(spark, root, col("x").between(0, 3)).size
+      val py = TxPrune.files(spark, root, col("y").between(0, 3)).size
+      val pz = TxPrune.files(spark, root, col("z").between(0, 3)).size
+      val pxyz = TxPrune.files(spark, root, col("x").between(0, 3) &&
+        col("y").between(0, 3) && col("z").between(0, 3)).size
       assert(px < all, "x-range pruned nothing — not a multi-D layout")
       assert(py < all, "y-range pruned nothing — a 1-D sort would fail this")
       assert(pz < all, "z-range pruned nothing — 2-D zorder would fail this")
       assert(pxyz <= Seq(px, py, pz).min,
         s"conjunction ($pxyz) should not exceed any 1-D pruning " +
           s"($px, $py, $pz)")
-      val got = TxTable.readPrunedMulti(spark, root,
-        Seq(("x", 0.0, 3.0), ("y", 0.0, 3.0), ("z", 0.0, 3.0)))
+      val got = spark.read.format("tx").load(root)
+        .filter(col("x").between(0, 3) && col("y").between(0, 3) &&
+          col("z").between(0, 3))
         .collect().map(_.getAs[Long]("id")).toSet
       val full = TxTable.read(spark, root)
         .filter(col("x") <= 3 && col("y") <= 3 && col("z") <= 3)
@@ -569,7 +572,7 @@ class TxTableSpec extends AnyFunSuite {
       assert(v1.stats.values.forall(_.map(_._1).toSet == Set("x", "y")),
         "rewritten files carry key-only stats — the y dimension degraded")
       val all = v1.files.size
-      assert(TxTable.prunedFilesMulti(root, Seq(("y", 0.0, 15.0))).size < all,
+      assert(TxPrune.files(spark, root, col("y").between(0, 15)).size < all,
         "y-pruning no longer works after the merge")
     }
   }
@@ -728,15 +731,16 @@ class TxTableSpec extends AnyFunSuite {
       assert(snap.files.nonEmpty)
       assert(snap.files.forall(f =>
         snap.parts.get(f).exists(_.count(_._1 == "lang") == 1)))
-      val en = TxTable.partPrunedFiles(root, "lang", Set("en"))
+      val en = TxPrune.files(spark, root, col("lang") === "en")
       assert(en.nonEmpty && en.size < snap.files.size)
       assert(en.forall(f =>
         snap.parts(f).exists(p => p._1 == "lang" && p._2.contains("en"))))
       // the partition column is still IN the data (reader-visible)
       assert(TxTable.read(spark, root).columns.toSeq ==
         Seq("id", "lang", "n"))
-      val got = TxTable.readPartitionPruned(spark, root, "lang",
-        Seq("en", "fr")).collect().map(_.getLong(0)).toSet
+      val got = spark.read.format("tx").load(root)
+        .filter(col("lang").isin("en", "fr"))
+        .collect().map(_.getLong(0)).toSet
       assert(got == Set(1L, 2L, 4L))
     }
   }
@@ -774,7 +778,7 @@ class TxTableSpec extends AnyFunSuite {
       val counts = TxTable.partitionRowCounts(spark, root, "lang")
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(counts == Map("en" -> 10L, "fr" -> 9L), counts.toString)
-      val fr = TxTable.readPartitionPruned(spark, root, "lang", Seq("fr"))
+      val fr = spark.read.format("tx").load(root).filter(col("lang") === "fr")
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
       assert(fr == (1L until 18L by 2).map(i =>
         (i, if (i == 3L) 999L else if (i == 5L) 555L else i * 10L)).toSet)
@@ -794,14 +798,15 @@ class TxTableSpec extends AnyFunSuite {
         .collect { case ("src", v) => v }.toSet
       // space, '=', '/' survive the hive path escape round-trip
       assert(vals == Set(Some("web data"), Some("a=b/c"), None))
-      assert(TxTable.partPrunedFiles(root, "src", Set("web data"))
+      assert(TxPrune.files(spark, root, col("src") === "web data")
         .size == 1)
-      val withNull = TxTable.partPrunedFiles(root, "src",
-        Set("web data"), includeNull = true)
+      val withNull = TxPrune.files(spark, root,
+        col("src") === "web data" || col("src").isNull)
       assert(withNull.size == 2)
       // exact read re-applies the predicate (null never matches IN)
-      assert(TxTable.readPartitionPruned(spark, root, "src",
-        Seq("a=b/c")).collect().map(_.getLong(0)).toSet == Set(3L))
+      assert(spark.read.format("tx").load(root)
+        .filter(col("src") === "a=b/c").collect().map(_.getLong(0)).toSet
+        == Set(3L))
     }
   }
 
@@ -886,7 +891,7 @@ class TxTableSpec extends AnyFunSuite {
           .toDF("id", "lang", "n"),
         partitionBy = Some("lang"))
       val parent = TxTable.currentSnapshot(root).get
-      val deFiles = TxTable.partPrunedFiles(root, "lang", Set("de")).toSet
+      val deFiles = TxPrune.files(spark, root, col("lang") === "de").toSet
       TxTable.overwritePartitions(spark, root,
         Seq((10L, "en", 10L), (20L, "fr", 20L)).toDF("id", "lang", "n"),
         "lang", txn = Some(("dpo", 1L)))
@@ -926,11 +931,11 @@ class TxTableSpec extends AnyFunSuite {
         rows.repartitionByRange(8, col("grp"), col("x")),
         partitionBy = Some("grp"), statsCols = Seq("x"))
       val snap = TxTable.currentSnapshot(root).get
-      val partOnly = TxTable.partPrunedFiles(root, "grp", Set("g1"))
-      val rangeOnly = TxTable.prunedFiles(root, "x", 10.0, 20.0)
+      val partOnly = TxPrune.files(spark, root, col("grp") === "g1")
+      val rangeOnly = TxPrune.files(spark, root, col("x").between(10.0, 20.0))
       val both = {
-        val df = TxTable.readPartitionRangePruned(spark, root, "grp",
-          Seq("g1"), Seq(("x", 10.0, 20.0)))
+        val df = spark.read.format("tx").load(root)
+          .filter(col("grp") === "g1" && col("x").between(10.0, 20.0))
         df.collect() // force
         df
       }
@@ -1131,7 +1136,7 @@ class TxTableSpec extends AnyFunSuite {
         grid.repartitionByRange(16, col("id")).sortWithinPartitions("id"),
         statsCols = Seq("x", "y"))
       val before = TxTable.currentSnapshot(root).get
-      assert(TxTable.prunedFilesMulti(root, Seq(("y", 0.0, 7.0))).size
+      assert(TxPrune.files(spark, root, col("y").between(0, 7)).size
         == before.files.size, "row-major layout should NOT prune on y")
       spark.sql(s"SELECT * FROM tx_delete_where('$root', 'id = 1000')")
       val r = spark.sql(s"SELECT * FROM tx_zorder('$root', 'x,y', 16)").head()
@@ -1140,8 +1145,8 @@ class TxTableSpec extends AnyFunSuite {
       assert(snap.op.contains("zorder") && snap.dvs.isEmpty,
         "zorder rewrite applies DVs (doubles as purge)")
       val all = snap.files.size
-      val px = TxTable.prunedFilesMulti(root, Seq(("x", 0.0, 7.0))).size
-      val py = TxTable.prunedFilesMulti(root, Seq(("y", 0.0, 7.0))).size
+      val px = TxPrune.files(spark, root, col("x").between(0, 7)).size
+      val py = TxPrune.files(spark, root, col("y").between(0, 7)).size
       assert(px < all && py < all,
         s"both axes must prune after tx_zorder ($px, $py of $all)")
       val got = TxTable.read(spark, root)
@@ -1152,8 +1157,8 @@ class TxTableSpec extends AnyFunSuite {
         s"SELECT * FROM tx_zorder('$root', 'x,y', 16, 'hilbert')").head()
       assert(h.getLong(1) == 3L)
       val hsnap = TxTable.currentSnapshot(root).get
-      val hx = TxTable.prunedFilesMulti(root, Seq(("x", 0.0, 7.0))).size
-      val hy = TxTable.prunedFilesMulti(root, Seq(("y", 0.0, 7.0))).size
+      val hx = TxPrune.files(spark, root, col("x").between(0, 7)).size
+      val hy = TxPrune.files(spark, root, col("y").between(0, 7)).size
       assert(hx < hsnap.files.size && hy < hsnap.files.size,
         s"both axes must prune under hilbert ($hx, $hy of ${hsnap.files.size})")
       assert(TxTable.read(spark, root)
@@ -1184,7 +1189,7 @@ class TxTableSpec extends AnyFunSuite {
         .exists(_.exists(_._1 == "g"))),
         "zorder on a partitioned parent must keep every file part-covered")
       // partition pruning still answers from metadata
-      val aFiles = TxTable.partPrunedFilesMulti(root, Seq("g" -> Set("a")))
+      val aFiles = TxPrune.files(spark, root, col("g") === "a")
       assert(aFiles.nonEmpty && aFiles.size < snap.files.size)
       // parent's stat coverage carried AND clustering cols added
       assert(snap.stats.values.forall(sts =>
@@ -1196,8 +1201,8 @@ class TxTableSpec extends AnyFunSuite {
         "exact sum lines must re-record through the rewrite")
       // both curve axes prune within the kept layout
       val all = snap.files.size
-      assert(TxTable.prunedFilesMulti(root, Seq(("x", 0.0, 7.0))).size < all)
-      assert(TxTable.prunedFilesMulti(root, Seq(("y", 0.0, 7.0))).size < all)
+      assert(TxPrune.files(spark, root, col("x").between(0, 7)).size < all)
+      assert(TxPrune.files(spark, root, col("y").between(0, 7)).size < all)
       // content identical
       assert(TxTable.read(spark, root).collect()
         .map(_.getAs[Long]("id")).toSet ==
@@ -1318,18 +1323,16 @@ class TxTableSpec extends AnyFunSuite {
         val m = snap.parts(f).toMap
         m("g").contains("g1") && m("h").contains("h2")
       }.toSet
-      val got = TxTable.partPrunedFilesMulti(root,
-        Seq(("g", Set("g1")), ("h", Set("h2")))).toSet
+      val got = TxPrune.files(spark, root,
+        col("g") === "g1" && col("h") === "h2").toSet
       assert(got == want)
       // conjunction is strictly tighter than either dimension alone
-      assert(got.size < TxTable.partPrunedFilesMulti(root,
-        Seq(("g", Set("g1")))).size)
-      assert(got.size < TxTable.partPrunedFilesMulti(root,
-        Seq(("h", Set("h2")))).size)
+      assert(got.size < TxPrune.files(spark, root, col("g") === "g1").size)
+      assert(got.size < TxPrune.files(spark, root, col("h") === "h2").size)
       // three pruning dimensions, same answer as the plain filter
-      val pruned = TxTable.readPartitionRangePrunedMulti(spark, root,
-        Seq(("g", Seq("g1")), ("h", Seq("h0", "h2"))),
-        Seq(("x", 50.0, 180.0)))
+      val pruned = spark.read.format("tx").load(root)
+        .filter(col("g") === "g1" && col("h").isin("h0", "h2") &&
+          col("x").between(50, 180))
         .select("id").collect().map(_.getLong(0)).toSet
       val plain = TxTable.read(spark, root)
         .filter(col("g") === "g1" && col("h").isin("h0", "h2") &&
@@ -1374,11 +1377,11 @@ class TxTableSpec extends AnyFunSuite {
         snap.parts.getOrElse(f, Seq.empty).map(_._1) == Seq("g")
       }
       assert(partialFiles.nonEmpty)
-      val hPruned = TxTable.partPrunedFilesMulti(root,
-        Seq(("h", Set("h2")))).toSet
+      val hPruned = TxPrune.files(spark, root, col("h") === "h2").toSet
       assert(partialFiles.forall(hPruned.contains))
-      val viaPrune = TxTable.readPartitionPruned(spark, root, "h",
-        Seq("h2")).select("id").collect().map(_.getLong(0)).toSet
+      val viaPrune = spark.read.format("tx").load(root)
+        .filter(col("h") === "h2")
+        .select("id").collect().map(_.getLong(0)).toSet
       assert(viaPrune ==
         TxTable.read(spark, root).filter(col("h") === "h2")
           .select("id").collect().map(_.getLong(0)).toSet)

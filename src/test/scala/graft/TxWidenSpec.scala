@@ -140,7 +140,7 @@ class TxWidenSpec extends AnyFunSuite {
       assert(df.orderBy("key").collect().map(_.getLong(0)).toSeq ==
         Seq(1L, 2L, 7000000000L))
       // pruned read by the NEW name over the OLD files' stat lines
-      val pruned = TxTable.prunedFiles(root, "key", 1.0, 1.0)
+      val pruned = TxPrune.files(spark, root, col("key") === 1L)
       assert(pruned.size < TxTable.currentSnapshot(root).get.files.size)
     }
   }
@@ -194,7 +194,7 @@ class TxWidenSpec extends AnyFunSuite {
       assert(df.orderBy("k").collect().map(_.getLong(0)).toSeq ==
         Seq(1L, 2L))
       // stat pruning survives (stat lines were always doubles)
-      assert(TxTable.prunedFiles(root, "k", 1.0, 1.0).nonEmpty)
+      assert(TxPrune.files(spark, root, col("k") === 1L).nonEmpty)
       // time travel still narrow
       assert(TxTable.readVersion(spark, root, 0L)
         .schema("k").dataType == IntegerType)
