@@ -385,8 +385,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // PreprocessTableInsertion hands it to the raw-parquet insert
     // command (which would write files no manifest references)
     e.injectResolutionRule(s => graft.sources.TxInsertRouting(s))
-    // partitionedRead over live deletion vectors: expand the surrogate
-    // relation into partition-surfaced-scan + broadcast DV anti-join
+    // partitionedRead over a column mapping: expand the surrogate
+    // relation into partition-surfaced-scan + vintage coalesce
     e.injectResolutionRule(s => graft.sources.TxMorDppRouting(s))
     // SQL table functions over the transactional layer (tx_read /
     // tx_history / tx_changes)

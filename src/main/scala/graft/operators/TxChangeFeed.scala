@@ -126,7 +126,9 @@ object TxChangeFeed {
     }
     if (touched.isEmpty) return None
     val dvFiles = touched.flatMap(_._2).distinct
-    val dv = s.read.parquet(dvFiles.map(f => TxTable.absFile(root, f)): _*)
+    // the blob schema is pinned: no schema-inference job per poll
+    val dv = s.read.schema("file STRING, pos BIGINT")
+      .parquet(dvFiles.map(f => TxTable.absFile(root, f)): _*)
       .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
     val base = TxTable.readDataFiles(s, snap,
         touched.map(t => TxTable.absFile(root, t._1)))

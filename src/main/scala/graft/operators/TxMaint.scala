@@ -410,7 +410,7 @@ object TxMaint {
   // and a manifest with `dv` lines (TxDvSpec pins the file-list identity;
   // at 100 TB a delete commit is kilobytes). The second delete overlaps
   // the first, exercising the already-deleted-position exclusion. The
-  // head read applies the DVs by broadcast anti-join on (file, position),
+  // head read applies the DVs in the parquet reader by (file, row index),
   // and must equal the plain-SQL complement filter — the MoR counterpart
   // of q168's copy-on-write deleteRange.
   def q177TxDeleteMor(s: SparkSession, d: String): DataFrame = {

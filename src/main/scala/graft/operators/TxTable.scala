@@ -205,7 +205,8 @@ object TxTable {
     * `(file string, pos long)` row positions deleted from data files.
     * A data file with DV entries is still listed in `files` (its bytes
     * are immutable and pinned readers of older versions still need
-    * them); every read path anti-joins the positions out. [[deleteWhere]]
+    * them); every read path drops the positions inside the parquet
+    * reader ([[graft.sources.TxParquetFileFormat]]). [[deleteWhere]]
     * appends DVs (a delete commit writes KILOBYTES, rewrites nothing);
     * [[purgeDeletes]]/any copy-on-write rewrite materializes them and
     * drops the lines.
@@ -224,7 +225,7 @@ object TxTable {
     * pairs; None = the hive null sentinel) — Iceberg-style partitioning:
     * the values live in the MANIFEST, not in reader-visible paths, and
     * the partition column stays present in the data files, so every
-    * read seam (DV anti-join, maintenance rewrite inputs, time travel)
+    * read seam (in-reader DVs, maintenance rewrite inputs, time travel)
     * works unchanged and pruning is a pure metadata filter
     * ([[graft.sources.TxFileIndex]]). Files without a part line for a
     * column are never pruned on it; the scan re-applies the exact
@@ -337,6 +338,19 @@ object TxTable {
     concat(lit("data/"), url_decode(regexp_replace(
       substring_index(col("_metadata.file_path"), "/data/", -1),
       "\\+", "%2B")))
+  }
+
+  /** [[relFileFromMeta]] for one scanned file's URL-encoded path (a
+    * `PartitionedFile.urlEncodedPath`, the string `_metadata.file_path`
+    * carries): the same percent-decoded suffix after the last `/data/`,
+    * with literal '+' protected the same way. The in-reader DV filter
+    * keys positions by this, so it must stay in step with the Column.
+    */
+  private[graft] def identityOfScanPath(urlEncoded: String): String = {
+    val i = urlEncoded.lastIndexOf("/data/")
+    val suffix = if (i < 0) urlEncoded else urlEncoded.substring(i + 6)
+    "data/" + java.net.URLDecoder.decode(suffix.replace("+", "%2B"),
+      java.nio.charset.StandardCharsets.UTF_8)
   }
 
   /** [[absFile]] for driver-side java.nio access (sizing, existence):
@@ -822,37 +836,88 @@ object TxTable {
     }
 
   /** Read a subset of a snapshot's data files with its deletion vectors
-    * applied — THE read seam every path (snapshot read, pruned read,
-    * maintenance rewrite input) goes through, so a merge-on-read delete
-    * can never resurrect: the scan attaches the parquet `_metadata`
-    * pseudo-column, derives the root-relative path (everything after the
-    * last `/data/` — data files are always directly under `root/data/`),
-    * and LEFT ANTI joins the DV positions on (file, row position). The
-    * DV side is broadcast: at 100 TB the deleted-position set of a table
-    * between purges is megabytes, the classic DV sizing. Tables (or
-    * subsets) without DVs take the plain scan — zero overhead.
+    * applied — THE read seam every path (snapshot read, maintenance
+    * rewrite input, change-feed diff, the column-mapped relation) goes
+    * through, so a merge-on-read delete can never resurrect. The frame
+    * is [[scanFilesWithDvs]] (one parquet file scan over the subset, DVs
+    * applied in the parquet reader) with the logical projection on top.
     */
   private[graft] def readFilesWithDvs(s: SparkSession, root: String,
-      snap: Snapshot, files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, concat, lit, substring_index}
-    val base = readDataFiles(s, snap, files.map(f => absFile(root, f)))
-    val dvFiles = files.flatMap(f =>
-      snap.dvs.getOrElse(f, Seq.empty).map(_._1)).distinct
-    if (dvFiles.isEmpty) projectLogical(snap, base)
-    else projectLogical(snap, {
-      // dv blobs may carry entries for files outside this subset — those
-      // reference paths not being scanned, so the anti-join ignores them
-      val dv = s.read.parquet(dvFiles.map(f => absFile(root, f)): _*)
-        .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-      val withMeta = base
-        .withColumn("__rel", relFileFromMeta)
-        .withColumn("__pos", col("_metadata.row_index"))
-      withMeta.join(broadcast(dv),
-          withMeta("__rel") === dv("__dv_file") &&
-            withMeta("__pos") === dv("__dv_pos"), "left_anti")
-        .drop("__rel", "__pos")
-    })
+      snap: Snapshot, files: Seq[String]): DataFrame =
+    projectLogical(snap, scanFilesWithDvs(s, root, snap, files))
+
+  /** The physical half of [[readFilesWithDvs]]: the subset as the same
+    * file-scan shape `format("tx")` plans
+    * ([[graft.sources.TxBatchRelation.fileScan]]), read at
+    * [[pinnedReadSchema]] (vintage names, logical types) — so DVs are
+    * dropped inside the parquet reader by physical row index, and
+    * `_metadata` stays resolvable for callers that record row
+    * coordinates.
+    */
+  private[graft] def scanFilesWithDvs(s: SparkSession, root: String,
+      snap: Snapshot, files: Seq[String]): DataFrame =
+    s.baseRelationToDataFrame(graft.sources.TxBatchRelation.fileScan(s,
+      root, snap.copy(files = files), pinnedReadSchema(snap)))
+
+  /** Whether any snapshot file still carries deletion vectors — the one
+    * property that puts the DV filter into a scan's parquet reader.
+    */
+  private[graft] def hasLiveDvs(snap: Snapshot): Boolean =
+    snap.files.exists(snap.dvs.contains)
+
+  /** The deleted positions of one DV blob, by row identity, each array
+    * sorted — read on the driver with parquet-mr ([[fileRows]]'s
+    * pattern: a blob is kilobytes, and no Spark job runs).
+    */
+  private def dvBlobPositions(hconf: org.apache.hadoop.conf.Configuration,
+      root: String, blob: String): Map[String, Array[Long]] = {
+    import scala.collection.mutable
+    val acc = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofLong]
+    val r = org.apache.parquet.hadoop.ParquetReader.builder(
+        new org.apache.parquet.hadoop.example.GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(absFile(root, blob)))
+      .withConf(hconf).build()
+    try {
+      var g = r.read()
+      while (g != null) {
+        acc.getOrElseUpdate(g.getString("file", 0),
+          new mutable.ArrayBuilder.ofLong) += g.getLong("pos", 0)
+        g = r.read()
+      }
+    } finally r.close()
+    acc.map { case (id, ps) =>
+      val a = ps.result()
+      java.util.Arrays.sort(a)
+      id -> a
+    }.toMap
   }
+
+  /** Every live DV of a snapshot as row identity → sorted deleted
+    * positions: each file's own blobs, restricted to that file's
+    * identity (a blob also lists rows of files it no longer applies to,
+    * once those were rewritten). Empty when nothing is deleted.
+    */
+  private[graft] def liveDvPositions(
+      hconf: org.apache.hadoop.conf.Configuration, root: String,
+      snap: Snapshot): Map[String, Array[Long]] = {
+    val withDv = snap.files.filter(snap.dvs.contains)
+    val byBlob = withDv.flatMap(f => snap.dvs(f).map(_._1)).distinct
+      .map(b => b -> dvBlobPositions(hconf, root, b)).toMap
+    withDv.flatMap { f =>
+      val id = identityOf(f)
+      val ps = snap.dvs(f).map(_._1).distinct
+        .flatMap(b => byBlob(b).getOrElse(id, Array.emptyLongArray))
+      if (ps.isEmpty) None else Some(id -> ps.toArray.sorted)
+    }.toMap
+  }
+
+  /** Rows a freshly written DV blob deletes, per row identity — what
+    * the new `dv` lines record ([[dvBlobPositions]], no Spark job).
+    */
+  private def dvBlobCounts(s: SparkSession, root: String,
+      blob: String): Map[String, Long] =
+    dvBlobPositions(s.sparkContext.hadoopConfiguration, root, blob)
+      .map { case (id, ps) => id -> ps.length.toLong }
 
   /** Newest committed snapshot as an explicit-path DataFrame. */
   def read(s: SparkSession, root: String): DataFrame =
@@ -3031,43 +3096,36 @@ object TxTable {
     * [[deleteRange]]'s posture), the matched ROW POSITIONS are written as
     * a tiny deletion-vector parquet and the commit just adds `dv` lines —
     * data files untouched, so a delete over a 100 TB table writes
-    * kilobytes and the read side anti-joins the positions out
+    * kilobytes and the parquet reader drops the positions on every read
     * ([[readFilesWithDvs]]). The trade is the classic MoR one: O(1)-ish
-    * delete commits, a broadcast anti-join tax on every read until
-    * [[purgeDeletes]] (or any copy-on-write rewrite of the file)
-    * materializes the deletes.
+    * delete commits, a per-row position check on every read of a file
+    * with DVs until [[purgeDeletes]] (or any copy-on-write rewrite of the
+    * file) materializes the deletes.
     *
     * `prune` narrows the scan to files whose recorded stats can intersect
     * every (col, lo, hi) conjunct — a delete keyed near the clustering
-    * column scans a few files, not the table. Positions already deleted
-    * by earlier DVs are excluded before writing, so per-file dv counts
-    * stay disjoint and [[history]]'s live-row subtraction stays exact.
+    * column scans a few files, not the table. The candidates are scanned
+    * with their DVs applied, so positions already deleted never match:
+    * per-file dv counts stay disjoint and [[history]]'s live-row
+    * subtraction stays exact.
     * A delete matching nothing publishes nothing and returns the head
     * version. Serializable via the claim-retry loop.
     */
   def deleteWhere(s: SparkSession, root: String,
       cond: org.apache.spark.sql.Column,
       prune: Seq[(String, Double, Double)] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.{broadcast, concat, lit, substring_index}
     var committed = -1L
     while (committed < 0) {
       val parent = currentSnapshot(root).getOrElse(throw new
           java.io.IOException(s"txtable $root has no version to delete from"))
       val cand = statPrunedFiles(root, parent, prune)
       if (cand.isEmpty) return parent.version
-      val scan = attachLogical(parent,
-        readDataFiles(s, parent, cand.map(f => absFile(root, f))))
+      // the DV-aware scan: positions earlier DVs deleted never match, so
+      // the fresh blob is disjoint from every prior one by construction
+      val fresh = attachLogical(parent, scanFilesWithDvs(s, root, parent, cand))
         .withColumn("file", relFileFromMeta)
         .withColumn("pos", col("_metadata.row_index"))
-      val matched = scan.filter(cond).select("file", "pos")
-      val priorDvFiles = cand.flatMap(f =>
-        parent.dvs.getOrElse(f, Seq.empty).map(_._1)).distinct
-      val fresh =
-        if (priorDvFiles.isEmpty) matched
-        else matched.join(
-          broadcast(s.read.parquet(
-            priorDvFiles.map(f => absFile(root, f)): _*)),
-          Seq("file", "pos"), "left_anti")
+        .filter(cond).select("file", "pos")
       // one part file per delete commit: the dv line references it by name
       val written = writeData(s, root, fresh.repartition(1))
       val dvFile = written match {
@@ -3075,9 +3133,7 @@ object TxTable {
         case other => throw new IllegalStateException(
           s"dv write produced ${other.size} parts, expected 1")
       }
-      val counts = s.read.parquet(s"$root/$dvFile")
-        .groupBy("file").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val counts = dvBlobCounts(s, root, dvFile)
       if (counts.isEmpty) return parent.version // matched nothing: no-op
       // DV contents key rows by their root-INDEPENDENT identity; the
       // manifest's dv lines key by the file ENTRY — identical for the
@@ -3148,7 +3204,6 @@ object TxTable {
       cond: org.apache.spark.sql.Column,
       set: Seq[(String, org.apache.spark.sql.Column)],
       prune: Seq[(String, Double, Double)] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.{broadcast, concat, lit, substring_index}
     require(set.nonEmpty, "updateWhere needs at least one set column")
     var committed = -1L
     while (committed < 0) {
@@ -3156,23 +3211,13 @@ object TxTable {
           java.io.IOException(s"txtable $root has no version to update"))
       val cand = statPrunedFiles(root, parent, prune)
       if (cand.isEmpty) return parent.version
-      val scan = attachLogical(parent,
-        readDataFiles(s, parent, cand.map(f => absFile(root, f))))
+      // the DV-aware scan: rows earlier DVs deleted are never matched
+      val scan = attachLogical(parent, scanFilesWithDvs(s, root, parent, cand))
         .withColumn("__file", relFileFromMeta)
         .withColumn("__pos", col("_metadata.row_index"))
-      val matched = scan.filter(cond)
-      val priorDvFiles = cand.flatMap(f =>
-        parent.dvs.getOrElse(f, Seq.empty).map(_._1)).distinct
-      val live =
-        if (priorDvFiles.isEmpty) matched
-        else matched.join(
-          broadcast(s.read.parquet(
-              priorDvFiles.map(f => absFile(root, f)): _*)
-            .select(col("file").as("__file"), col("pos").as("__pos"))),
-          Seq("__file", "__pos"), "left_anti")
       // freeze the matched set: the DV write and the image write are two
       // evaluations — they must describe the same rows
-      val frozen = live.localCheckpoint(true)
+      val frozen = scan.filter(cond).localCheckpoint(true)
       if (frozen.isEmpty) return parent.version
       val images = set.foldLeft(frozen) { case (d, (c, e)) =>
         require(d.columns.contains(c),
@@ -3195,9 +3240,7 @@ object TxTable {
         case other => throw new IllegalStateException(
           s"dv write produced ${other.size} parts, expected 1")
       }
-      val counts = s.read.parquet(s"$root/$dvFile")
-        .groupBy("file").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val counts = dvBlobCounts(s, root, dvFile)
       val byIdentity = parent.files.groupBy(identityOf).map {
         case (id, Seq(one)) => id -> one
         case (id, many) => throw new IllegalStateException(
@@ -3863,7 +3906,7 @@ object TxTable {
     * carries the source version's schema, per-file stats/rows/parts/
     * blooms, live deletion vectors, CHECK constraints, column mapping
     * and bucket layout, so every read posture — stat/bloom/partition
-    * pruning, MoR anti-joins, co-located bucket joins, metadata-only
+    * pruning, in-reader DVs, co-located bucket joins, metadata-only
     * aggregates, the `format("tx")` connector — answers on the clone
     * exactly as on the source version (DV blobs key rows by their
     * root-INDEPENDENT identity, [[identityOf]], which is why they keep

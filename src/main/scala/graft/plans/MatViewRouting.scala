@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.sources.TxFileIndex
+
 /** Optimizer rule: route an aggregate over a BASE table to a maintained
   * SUMMARY table (materialized-view query rewrite — the classic OLAP
   * answer to "the view is maintained incrementally, now make queries USE
@@ -57,15 +59,15 @@ object MatViewRouting extends Rule[LogicalPlan] {
     * `sumCols` maps a base column to the summary column holding its
     * per-group partial sum; `cntCol` holds the per-group row count.
     *
-    * A base read carrying deletion vectors never routes: its plan is an
-    * anti-join, not a pure scan, so [[apply]]'s `baseScan` match fails —
-    * the rule degrades to no-op rather than risking deleted rows
-    * resurfacing through a summary built before the delete.
+    * A tx base pins its snapshot's files AND the deletion-vector blobs
+    * its parquet reader applies, so a delete moves the pin exactly like
+    * an append does: a summary built before the delete never serves a
+    * read after it.
     */
   def register(base: DataFrame, summary: DataFrame, groupCol: String,
       cntCol: String, sumCols: Map[String, String]): Unit = {
     val files = base.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => rootPaths(lr)
+      case lr: LogicalRelation => pinOf(lr)
     }.flatten.toSet
     require(files.nonEmpty, "matview base has no file scan to pin")
     val r = Registration(files, summary.queryExecution.analyzed,
@@ -75,8 +77,19 @@ object MatViewRouting extends Rule[LogicalPlan] {
 
   def clear(): Unit = registry.clear()
 
-  private def rootPaths(lr: LogicalRelation): Seq[String] = lr.relation match {
-    case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+  /** The identity a base scan is pinned by: a tx relation's snapshot
+    * (its root stays the same across commits, so the root alone would
+    * pin nothing), any other file relation's root paths.
+    */
+  private def pinOf(lr: LogicalRelation): Seq[String] = lr.relation match {
+    case h: HadoopFsRelation => h.location match {
+      case t: TxFileIndex =>
+        val root = t.rootPaths.map(_.toString).mkString(",")
+        val snap = t.snap
+        snap.files.flatMap(f => s"$root|$f" +:
+          snap.dvs.getOrElse(f, Seq.empty).map(dv => s"$root|$f|dv|${dv._1}"))
+      case other => other.rootPaths.map(_.toString)
+    }
     case _ => Seq.empty
   }
 
@@ -99,7 +112,7 @@ object MatViewRouting extends Rule[LogicalPlan] {
     import scala.jdk.CollectionConverters._
     for {
       lr <- baseScan(agg.child)
-      scan = rootPaths(lr).toSet
+      scan = pinOf(lr).toSet
       reg <- registry.asScala.find(_.baseFiles == scan)
       g <- agg.groupingExpressions match {
         case Seq(a: AttributeReference) if a.name == reg.groupCol => Some(a)

@@ -34,10 +34,11 @@ import graft.sources.{TxBatchRelation, TxMorRelation}
   * refuses.
   *
   * MoR snapshots (r17 third wave): a snapshot with LIVE deletion
-  * vectors routes to [[TxMorRelation]], and the rule now answers there
-  * too — restricted to what stays exact under in-place row deletion.
-  * `deleteWhere` keeps per-file DV counts DISJOINT (positions already
-  * deleted are anti-joined out before a new DV publishes), so a file's
+  * vectors reads as a [[TxBatchRelation]] whose parquet reader drops
+  * the deleted rows, and the rule answers there too — restricted to
+  * what stays exact under in-place row deletion. `deleteWhere` keeps
+  * per-file DV counts DISJOINT (its scan applies the existing DVs, so
+  * already-deleted positions never enter a new blob), so a file's
   * live row count is exactly `rows − Σ dvCounts` — COUNT(*) and every
   * part-line-derived answer (a file's recorded part value holds for its
   * live rows as long as ANY survive) carry over with `rows` replaced by
@@ -53,9 +54,10 @@ import graft.sources.{TxBatchRelation, TxMorRelation}
   * zero-scan dashboard class.
   *
   * Soundness gates — every one required, no-op otherwise:
-  *   - the scan is a [[TxBatchRelation]] (the CLEAN-snapshot shape) or
-  *     a mapping-free [[TxMorRelation]] (DVs only — answers then come
-  *     from LIVE counts as above; a column mapping refuses);
+  *   - the scan is a [[TxBatchRelation]] (clean or DV-only; with live
+  *     DVs answers come from LIVE counts as above) or a column-mapped
+  *     [[TxMorRelation]] (alias-aware lookups, live counts when DVs
+  *     are live);
   *   - NOTHING stands between the aggregate and the scan but pure
   *     column-pruning Projects and Filters whose every referenced
   *     column is part-covered ([[filterFiles]] — the predicate is
@@ -98,8 +100,8 @@ object TxMetadataAgg extends Rule[LogicalPlan] {
     */
   private final case class Src(snap: TxTable.Snapshot, morLive: Boolean) {
     /** Live rows of `f`: the rows line minus the file's disjoint DV
-      * counts ([[TxTable.deleteWhere]] anti-joins already-deleted
-      * positions out before publishing, so the subtraction is exact).
+      * counts ([[TxTable.deleteWhere]] scans with the existing DVs
+      * applied before publishing, so the subtraction is exact).
       * None when the manifest can't say (no rows line, or corrupt
       * counts exceeding the file).
       */
@@ -127,8 +129,8 @@ object TxMetadataAgg extends Rule[LogicalPlan] {
 
   /** The pinned snapshot IF `p` is nothing but a (possibly
     * column-pruned, possibly partition-filtered) scan of a clean tx
-    * snapshot or a mapping-free MoR one — Filter conditions collect for
-    * [[filterFiles]].
+    * or DV-only snapshot, or a column-mapped one — Filter conditions
+    * collect for [[filterFiles]].
     */
   private def txSnapshot(p: LogicalPlan)
       : Option[(Src, Seq[Expression])] =
@@ -138,7 +140,11 @@ object TxMetadataAgg extends Rule[LogicalPlan] {
       case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, inner) =>
         txSnapshot(inner).map { case (s, cs) => (s, cond +: cs) }
       case lr: LogicalRelation => lr.relation match {
-        case tx: TxBatchRelation => Some((Src(tx.snapshot, false), Nil))
+        // a DV-only snapshot reads through this shape too (DVs applied
+        // in its parquet reader): answers must then come from LIVE counts
+        case tx: TxBatchRelation =>
+          val snap = tx.snapshot
+          Some((Src(snap, TxTable.hasLiveDvs(snap)), Nil))
         case mor: TxMorRelation =>
           // column-mapped snapshots answer too (r18): every stat/part/
           // sum lookup below resolves through the rename alias chains
@@ -149,7 +155,7 @@ object TxMetadataAgg extends Rule[LogicalPlan] {
           // survives only as lookup DEGRADATION: a vintage without the
           // line refuses that fold, never mis-answers it.
           val snap = mor.snapshot
-          Some((Src(snap, snap.dvs.nonEmpty), Nil))
+          Some((Src(snap, TxTable.hasLiveDvs(snap)), Nil))
         case _ => None
       }
       case _ => None

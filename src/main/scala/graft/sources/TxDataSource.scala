@@ -20,11 +20,12 @@ import graft.operators.TxTable
   *     own WHERE clause — no bespoke read API needed,
   *     `CREATE TABLE ... USING tx` works, `INSERT INTO` commits through
   *     the manifest protocol, and the scan itself is Spark's native
-  *     vectorized parquet reader. Snapshots carrying live deletion
-  *     vectors or a column mapping take [[TxMorRelation]] instead: the
-  *     same alias-aware manifest pruning, with the DV anti-join and
-  *     vintage coalesce composed IN-scan — `deleteWhere` and
-  *     `tx_rename_column` no longer exile a table from this path.
+  *     parquet reader. Live deletion vectors keep this shape: they are
+  *     applied inside the parquet reader ([[TxParquetFileFormat]]).
+  *     Column-mapped snapshots take [[TxMorRelation]] instead: the same
+  *     alias-aware manifest pruning, with the vintage coalesce composed
+  *     IN-scan — `deleteWhere` and `tx_rename_column` no longer exile a
+  *     table from this path.
   *   - STREAMING: `spark.readStream.format("tx").load(root)` tails the
   *     table as a structured-streaming source ([[TxStreamSource]]):
   *     offsets ARE committed versions, the first batch is the starting
@@ -152,9 +153,9 @@ final class TxDataSource extends RelationProvider
               TxDataSource.schemaOf(spark, root, end))))
         // window semantics under MoR: "rows added in (from, to], as they
         // stand AT the ending version" — a DV on a window file means some
-        // of its rows were deleted inside the window, and the MoR-aware
-        // relation anti-joins them out (rows-added-and-still-live). A
-        // column mapping at the end version likewise coalesces vintages.
+        // of its rows were deleted inside the window, and the relation's
+        // reader drops them (rows-added-and-still-live). A column mapping
+        // at the end version likewise coalesces vintages.
         return relationFor(spark, root, windowSnap, insertable = false, opts)
       case None => ()
     }
@@ -178,11 +179,12 @@ final class TxDataSource extends RelationProvider
   }
 
   /** Pick the relation shape for a snapshot: the file-granular
-    * `HadoopFsRelation` path when nothing row- or name-level stands
-    * between the files and the answer; the MoR-aware composed scan when
-    * live deletion vectors or a column mapping do ([[TxMorRelation]] —
-    * same pruning, same oracle-exact result, DV anti-join and vintage
-    * coalesce applied in-scan). Both are `InsertableRelation`s.
+    * `HadoopFsRelation` path ([[TxBatchRelation]]) unless a column
+    * mapping stands between the files and the answer — live deletion
+    * vectors do not, they are applied in its parquet reader. A
+    * column-mapped snapshot takes the mapping-aware composed scan
+    * ([[TxMorRelation]] — same pruning, same oracle-exact result,
+    * vintage coalesce applied in-scan). Both are `InsertableRelation`s.
     */
   private def relationFor(spark: SparkSession, root: String,
       snap: TxTable.Snapshot, insertable: Boolean,
@@ -191,8 +193,7 @@ final class TxDataSource extends RelationProvider
     // sessions built without GraftExtensions (bare spark-shell, Verify)
     // still answer unfiltered counts from the manifest (idempotent)
     graft.plans.TxMetadataAgg.enable(spark)
-    val needsMor = snap.files.exists(snap.dvs.contains) ||
-      snap.renames.nonEmpty || snap.deadCols.nonEmpty
+    val mapped = snap.renames.nonEmpty || snap.deadCols.nonEmpty
     val surfaced = opts.get("partitionedread").exists(_.toBoolean)
     def surfacedFields = {
       val fields = TxDataSource.surfacedPartitionFields(
@@ -203,24 +204,22 @@ final class TxDataSource extends RelationProvider
         "type (string / integral / boolean / date)")
       fields
     }
-    if (needsMor) {
+    if (mapped) {
       if (!surfaced) new TxMorRelation(spark, root, snap, insertable, opts)
       else {
-        // MoR composes with the surfaced posture: one partition-
-        // surfaced scan (DPP-eligible) + whatever the snapshot needs
-        // above it — the broadcast DV anti-join, the vintage-coalescing
-        // projection for a column MAPPING (r18: the scan reads the
-        // physical vintage-name union; partition values come from the
-        // alias-aware index, so a renamed partition column keeps DPP),
-        // or both — expanded by TxMorDppRouting at analysis. A session
-        // without the rewrite rule refuses: the raw scan would
-        // resurrect deleted rows / null out renamed columns.
+        // a column mapping composes with the surfaced posture: one
+        // partition-surfaced scan (DPP-eligible, DVs applied in its
+        // reader) reading the physical vintage-name union, with the
+        // vintage-coalescing projection above it (partition values come
+        // from the alias-aware index, so a renamed partition column
+        // keeps DPP) — expanded by TxMorDppRouting at analysis. A
+        // session without the rewrite rule refuses: the raw scan would
+        // null out renamed columns.
         require(spark.sessionState.analyzer.extendedResolutionRules
             .exists(_.isInstanceOf[TxMorDppRouting]),
-          s"txtable $root: partitionedRead over live deletion vectors " +
-            "or a column mapping needs the TxMorDppRouting rewrite " +
-            "(build the session with GraftExtensions), or " +
-            "purgeDeletes()/optimize() first")
+          s"txtable $root: partitionedRead over a column mapping needs " +
+            "the TxMorDppRouting rewrite (build the session with " +
+            "GraftExtensions)")
         new TxMorPartitionedSurrogate(spark, root, snap, opts,
           surfacedFields)
       }

@@ -63,7 +63,7 @@ final class TxFileIndex(root: String, snap0: TxTable.Snapshot,
     * so a `SELECT` through the same temp view sees the insert.
     */
   @volatile private var snapNow: TxTable.Snapshot = snap0
-  private[sources] def snap: TxTable.Snapshot = snapNow
+  private[graft] def snap: TxTable.Snapshot = snapNow
 
   private[sources] def repin(ns: TxTable.Snapshot): Unit = {
     snapNow = ns

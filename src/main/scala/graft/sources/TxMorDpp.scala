@@ -12,32 +12,28 @@ import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.operators.TxTable
 
-/** DPP for MoR and COLUMN-MAPPED snapshots: `partitionedRead` used to
-  * refuse any snapshot with live deletion vectors (r16) or a column
-  * mapping (until r18), so one `deleteWhere` — or one RENAME COLUMN —
+/** DPP for COLUMN-MAPPED snapshots: `partitionedRead` used to refuse
+  * any snapshot with a column mapping (until r18), so one RENAME COLUMN
   * knocked a DPP-read fact table back to the flat posture until a full
-  * rewrite. The composition that fixes both: keep ONE partition-
-  * surfaced `HadoopFsRelation` scan over ALL files (DPP- and
+  * rewrite. The composition that fixes it: keep ONE partition-surfaced
+  * `HadoopFsRelation` scan over ALL files (DPP- and
   * partition-prune-eligible, vectorized) reading the PHYSICAL
-  * vintage-name union, and apply above it whatever the snapshot needs —
-  * the broadcast `(file, pos)` anti-join `TxTable.readFilesWithDvs`
-  * runs (row identity from the scan's own `_metadata.file_path`/
-  * `_metadata.row_index`, exactly the coordinates `deleteWhere`
-  * recorded), and/or the exact vintage-coalescing projection
-  * (`projectLogical`'s argument: a file carries exactly one vintage of
-  * a column). Partition values come from the alias-aware index, never
-  * the file bytes, and the partition attribute passes through the
-  * projection untouched — which is what keeps the scan DPP-eligible.
-  * Delta applies DVs inside its custom scan; this is the same plan
-  * shape one operator higher, with every scan-level mechanism intact
-  * underneath.
+  * vintage-name union, and apply the exact vintage-coalescing
+  * projection above it (`projectLogical`'s argument: a file carries
+  * exactly one vintage of a column). Live deletion vectors need nothing
+  * here: the base [[TxBatchRelation]]'s parquet reader drops them
+  * ([[TxParquetFileFormat]]), and a DV-only snapshot never reaches this
+  * rule — the connector plans it as a plain surfaced [[TxBatchRelation]].
+  * Partition values come from the alias-aware index, never the file
+  * bytes, and the partition attribute passes through the projection
+  * untouched — which is what keeps the scan DPP-eligible.
   *
   * [[TxMorPartitionedSurrogate]] is the analysis-time handle: the
-  * relation itself must never plan (a raw scan would RESURRECT deleted
-  * rows / null out renamed columns), so it carries no scannable shape —
-  * [[TxMorDppRouting]] (injected by GraftExtensions) rewrites its
-  * LogicalRelation into the composed subplan during resolution, and the
-  * connector refuses the posture up-front in sessions without the rule.
+  * relation itself must never plan (a raw scan would null out renamed
+  * columns), so it carries no scannable shape — [[TxMorDppRouting]]
+  * (injected by GraftExtensions) rewrites its LogicalRelation into the
+  * composed subplan during resolution, and the connector refuses the
+  * posture up-front in sessions without the rule.
   */
 final class TxMorPartitionedSurrogate(val spark: SparkSession,
     val root: String, val snap: TxTable.Snapshot,
@@ -53,17 +49,18 @@ final class TxMorPartitionedSurrogate(val spark: SparkSession,
   /** Never reached in a correctly-wired session; loud if it is. */
   override def buildScan(): RDD[Row] =
     throw new IllegalStateException(
-      s"txtable $root: a MoR partitionedRead relation was planned " +
-        "without the TxMorDppRouting rewrite — the raw scan would " +
-        "resurrect deleted rows. Build the session with GraftExtensions")
+      s"txtable $root: a column-mapped partitionedRead relation was " +
+        "planned without the TxMorDppRouting rewrite — the raw scan " +
+        "would null out renamed columns. Build the session with " +
+        "GraftExtensions")
 
   override def toString: String =
     s"TxMorPartitionedSurrogate[$root v${snap.version}]"
 }
 
-/** Analyzer rule: expand a [[TxMorPartitionedSurrogate]] into
-  * partition-surfaced-scan + broadcast DV anti-join, remapping the
-  * subplan's output onto the original relation's attribute ids so every
+/** Analyzer rule: expand a [[TxMorPartitionedSurrogate]] into the
+  * partition-surfaced scan + vintage coalesce, remapping the subplan's
+  * output onto the original relation's attribute ids so every
   * downstream reference resolves unchanged.
   */
 final case class TxMorDppRouting(spark: SparkSession)
@@ -80,8 +77,7 @@ final case class TxMorDppRouting(spark: SparkSession)
         // EXCEPT surfaced partition fields, whose values come from the
         // alias-aware index (never the file bytes), so only the logical
         // name stays (HadoopFsRelation's overlap resolution then reads
-        // it from the PartitionDirectory rows). Unmapped snapshots
-        // expand to exactly the logical schema — today's plan.
+        // it from the PartitionDirectory rows).
         val physSchema = StructType(m.schema.fields.flatMap { f =>
           if (partNames.contains(f.name)) Seq(f)
           else TxTable.namesOf(m.snap, f.name).map(n =>
@@ -91,30 +87,12 @@ final case class TxMorDppRouting(spark: SparkSession)
           insertable = false, m.opts, m.partitionFields,
           dataSchemaOverride = Some(physSchema))
         val scanDf = m.spark.baseRelationToDataFrame(base)
-        val dvFiles = m.snap.files.flatMap(f =>
-          m.snap.dvs.getOrElse(f, Seq.empty).map(_._1)).distinct
-        // the same row coordinates deleteWhere recorded: root-relative
-        // path + in-file row index, from the scan's own metadata struct
-        val clean0 =
-          if (dvFiles.isEmpty) scanDf // mapping-only surrogate: no DVs
-          else {
-            val dv = m.spark.read.parquet(
-              dvFiles.map(f => TxTable.absFile(m.root, f)): _*)
-              .select(col("file").as("__dv_file"),
-                col("pos").as("__dv_pos"))
-            val withMeta = scanDf
-              .withColumn("__rel", TxTable.relFileFromMeta)
-              .withColumn("__pos", col("_metadata.row_index"))
-            withMeta.join(broadcast(dv),
-              withMeta("__rel") === dv("__dv_file") &&
-                withMeta("__pos") === dv("__dv_pos"), "left_anti")
-          }
         // vintage coalesce up to the LOGICAL schema: a file carries
         // exactly one vintage of a column, so coalesce is exact (the
         // projectLogical argument); partition fields project directly —
         // their attribute passes through untouched, which is what keeps
         // the scan DPP-eligible under the projection
-        val clean = clean0.select(m.schema.fields.toIndexedSeq.map { f =>
+        val clean = scanDf.select(m.schema.fields.toIndexedSeq.map { f =>
           val vs = TxTable.namesOf(m.snap, f.name)
           if (partNames.contains(f.name) || vs.size == 1) col(f.name)
           else coalesce(vs.map(col): _*).as(f.name)

@@ -1,15 +1,17 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression, Literal, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, PrunedFilteredScan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.operators.TxTable
 
@@ -18,38 +20,41 @@ import graft.operators.TxTable
   * `Transform Silver Data.py:44-45`'s saveAsTable/CTAS posture carried
   * through to row-level SQL DML):
   *
-  *   - [[TxBatchRelation]] — a plain snapshot (no deletion vectors, no
-  *     column mapping) maps 1:1 onto Spark's file scan: a
-  *     `HadoopFsRelation` over [[TxFileIndex]], so manifest pruning
-  *     runs inside Catalyst planning and the scan is the native
-  *     vectorized parquet reader. Subclassing (rather than returning
-  *     `HadoopFsRelation` itself) adds `InsertableRelation`, which BOTH
-  *     routes `INSERT INTO` through `TxTable.commit` (Spark's
-  *     DataSourceAnalysis matches InsertableRelation before
-  *     HadoopFsRelation) AND retires a data-loss hazard: the raw
-  *     HadoopFsRelation match would have sent `INSERT OVERWRITE`
-  *     through InsertIntoHadoopFsRelationCommand, truncating the table
-  *     root — manifests included — behind the manifest protocol's back.
+  *   - [[TxBatchRelation]] — a snapshot without a column mapping
+  *     (clean, or carrying live deletion vectors) maps 1:1 onto Spark's
+  *     file scan: a `HadoopFsRelation` over [[TxFileIndex]], so manifest
+  *     pruning runs inside Catalyst planning and the scan is the native
+  *     parquet reader, with DVs applied inside it by physical row index
+  *     ([[TxParquetFileFormat]]) — one `FileSourceScanExec`, one job.
+  *     Subclassing (rather than returning `HadoopFsRelation` itself)
+  *     adds `InsertableRelation`, which BOTH routes `INSERT INTO`
+  *     through `TxTable.commit` (Spark's DataSourceAnalysis matches
+  *     InsertableRelation before HadoopFsRelation) AND retires a
+  *     data-loss hazard: the raw HadoopFsRelation match would have sent
+  *     `INSERT OVERWRITE` through InsertIntoHadoopFsRelationCommand,
+  *     truncating the table root — manifests included — behind the
+  *     manifest protocol's back.
   *
-  *   - [[TxMorRelation]] — a snapshot carrying live deletion vectors
-  *     and/or a column mapping cannot take the file-granular scan
-  *     (rows must be anti-joined out; vintage columns must coalesce),
-  *     so it composes the TxTable read seams under a
-  *     `PrunedFilteredScan`: pushed filters prune the manifest through
-  *     the SAME alias-aware [[TxFileIndex]], the survivors read through
-  *     `TxTable.readFilesWithDvs` (vectorized parquet scan + broadcast
-  *     DV anti-join + vintage coalesce, the exact `TxTable.read`
-  *     shape), translatable predicates re-apply inside the scan for
-  *     parquet row-group pushdown, and `needConversion = false` hands
-  *     the inner plan's InternalRows straight through — no row
-  *     conversion at the boundary. Spark re-applies every predicate
-  *     above the scan (`unhandledFilters` returns all), so pruning and
-  *     inner filtering only ever remove provably-dead work.
+  *   - [[TxMorRelation]] — a COLUMN-MAPPED snapshot (renamed or dropped
+  *     columns, with or without DVs) cannot take the file-granular scan
+  *     (vintage columns must coalesce), so it composes the TxTable read
+  *     seams under a `PrunedFilteredScan`: pushed filters prune the
+  *     manifest through the SAME alias-aware [[TxFileIndex]], the
+  *     survivors read through `TxTable.readFilesWithDvs` (the parquet
+  *     scan with DVs applied in the reader + vintage coalesce, the exact
+  *     `TxTable.read` shape), translatable predicates re-apply inside
+  *     the scan for parquet row-group pushdown, and
+  *     `needConversion = false` hands the inner plan's InternalRows
+  *     straight through — no row conversion at the boundary. Spark
+  *     re-applies every predicate above the scan (`unhandledFilters`
+  *     returns all), so pruning and inner filtering only ever remove
+  *     provably-dead work.
   *
   * This is what closes the composition gap: one `deleteWhere` or
   * `tx_rename_column` no longer exiles a table from
-  * `spark.read.format("tx")` — the relation shape degrades from
-  * file-granular to MoR-aware instead of refusing.
+  * `spark.read.format("tx")` — a delete keeps the file-granular shape,
+  * and a column mapping degrades it to the mapping-aware scan instead
+  * of refusing.
   */
 private[sources] object TxRelations {
 
@@ -173,17 +178,77 @@ private[sources] object TxRelations {
 }
 
 /** The parquet FileFormat tx relations declare: reads are stock
-  * vectorized parquet; WRITES REFUSE. A tx table is written only
-  * through the manifest commit protocol — but Spark's analyzer routes
-  * `INSERT INTO` a PARTITIONED HadoopFsRelation to
-  * `InsertIntoHadoopFsRelationCommand` (see [[TxInsertRouting]]), a raw
-  * file write into the table root that no manifest would ever
-  * reference: a "successful" insert whose rows every tx read ignores.
-  * Sessions with GraftExtensions re-route that statement; sessions
-  * without get stopped HERE, at prepareWrite, before one byte lands.
+  * vectorized parquet, with the pinned snapshot's DELETION VECTORS
+  * applied inside the reader; WRITES REFUSE.
+  *
+  * Deletion vectors: when the relation's snapshot ([[TxFileIndex.snap]],
+  * read when the scan is planned, so a relation repinned by `INSERT
+  * INTO` applies its new head's DVs) has live DVs, the deleted positions
+  * are loaded on the driver ([[TxTable.liveDvPositions]] — parquet-mr,
+  * no Spark job), keyed by row identity, and shipped in one broadcast.
+  * The reader then asks parquet for each row's PHYSICAL row index (the
+  * `_metadata.row_index` generator, which stays physical when pushed
+  * filters skip row groups), drops rows whose index is in their file's
+  * sorted position array, and projects the index column away again
+  * unless the query selected `_metadata.row_index` itself. A DV scan is
+  * row-based (`supportBatch` off); a snapshot without live DVs takes
+  * Spark's reader unchanged — no position map, no wrapper. This is
+  * Delta's `DeltaParquetFileFormat` shape, and what lets a DV-only
+  * snapshot plan as one `FileSourceScanExec` with Catalyst pruning.
+  *
+  * Writes: a tx table is written only through the manifest commit
+  * protocol — but Spark's analyzer routes `INSERT INTO` a PARTITIONED
+  * HadoopFsRelation to `InsertIntoHadoopFsRelationCommand` (see
+  * [[TxInsertRouting]]), a raw file write into the table root that no
+  * manifest would ever reference: a "successful" insert whose rows every
+  * tx read ignores. Sessions with GraftExtensions re-route that
+  * statement; sessions without get stopped HERE, at prepareWrite, before
+  * one byte lands.
   */
-final class TxParquetFileFormat
+final class TxParquetFileFormat(root: String = null,
+    @transient private val index: TxFileIndex = null)
     extends org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat {
+
+  private def dvSnapshot: Option[TxTable.Snapshot] =
+    Option(index).map(_.snap).filter(TxTable.hasLiveDvs)
+
+  override def supportBatch(sparkSession: SparkSession,
+      schema: StructType): Boolean =
+    dvSnapshot.isEmpty && super.supportBatch(sparkSession, schema)
+
+  override def buildReaderWithPartitionValues(sparkSession: SparkSession,
+      dataSchema: StructType, partitionSchema: StructType,
+      requiredSchema: StructType, filters: Seq[Filter],
+      options: Map[String, String],
+      hadoopConf: org.apache.hadoop.conf.Configuration)
+      : PartitionedFile => Iterator[InternalRow] = dvSnapshot match {
+    case None =>
+      super.buildReaderWithPartitionValues(sparkSession, dataSchema,
+        partitionSchema, requiredSchema, filters, options, hadoopConf)
+    case Some(snap) =>
+      if (options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true"))
+        throw new IllegalStateException(s"txtable $root v${snap.version}: " +
+          "a columnar scan was planned over live deletion vectors")
+      val deleted = sparkSession.sparkContext.broadcast(
+        TxTable.liveDvPositions(hadoopConf, root, snap))
+      val idxName = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+      val selected = requiredSchema.fieldNames.indexOf(idxName)
+      val readSchema =
+        if (selected >= 0) requiredSchema
+        // nullable: parquet refuses a required column the file lacks
+        else requiredSchema.add(StructField(idxName, LongType, nullable = true))
+      val read = super.buildReaderWithPartitionValues(sparkSession,
+        dataSchema, partitionSchema, readSchema, filters, options, hadoopConf)
+      // reader rows are readSchema ++ partitionSchema; the output drops
+      // the index column again when the query did not ask for it
+      val inTypes = (readSchema ++ partitionSchema).map(_.dataType)
+      val idx = if (selected >= 0) selected else requiredSchema.length
+      val keep =
+        if (selected >= 0) None
+        else Some(inTypes.indices.filter(_ != idx).map(i => (i, inTypes(i))))
+      TxParquetFileFormat.dvFiltered(read, deleted, idx, keep)
+  }
+
   override def prepareWrite(sparkSession: SparkSession,
       job: org.apache.hadoop.mapreduce.Job,
       options: Map[String, String], dataSchema: StructType)
@@ -198,28 +263,77 @@ final class TxParquetFileFormat
   override def toString: String = "TxParquet"
 }
 
-/** Clean-snapshot relation: Spark's own parquet `HadoopFsRelation` over
-  * the manifest-pruning [[TxFileIndex]], plus `InsertableRelation` so
+private object TxParquetFileFormat {
+
+  /** The per-file reader with DV rows dropped. Built here, not in the
+    * format, so the task closure captures only the broadcast and the
+    * column layout.
+    */
+  def dvFiltered(read: PartitionedFile => Iterator[InternalRow],
+      deleted: Broadcast[Map[String, Array[Long]]], idx: Int,
+      keep: Option[Seq[(Int, DataType)]])
+      : PartitionedFile => Iterator[InternalRow] = { file =>
+    val positions = deleted.value.getOrElse(
+      TxTable.identityOfScanPath(file.urlEncodedPath), null)
+    val project = keep.map(cols => UnsafeProjection.create(
+      cols.map { case (i, t) => BoundReference(i, t, nullable = true) }))
+    new DvFilterIterator(read(file), positions, idx, project.orNull)
+  }
+
+  /** Drops rows whose physical row index (column `idx`) is in the sorted
+    * `deleted` array (null: nothing deleted in this file), then applies
+    * `project` (null: pass through). Closeable, so the scan still closes
+    * the parquet reader underneath when a task stops early.
+    */
+  final class DvFilterIterator(rows: Iterator[InternalRow],
+      deleted: Array[Long], idx: Int, project: UnsafeProjection)
+      extends Iterator[InternalRow] with java.io.Closeable {
+    private var pending: InternalRow = null
+
+    override def hasNext: Boolean = {
+      while (pending == null && rows.hasNext) {
+        val r = rows.next()
+        if (deleted == null ||
+            java.util.Arrays.binarySearch(deleted, r.getLong(idx)) < 0)
+          pending = r
+      }
+      pending != null
+    }
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("end of file rows")
+      val r = pending
+      pending = null
+      if (project == null) r else project(r)
+    }
+
+    override def close(): Unit = rows match {
+      case c: java.io.Closeable => c.close()
+      case _ => ()
+    }
+  }
+}
+
+/** Snapshot relation: Spark's own parquet `HadoopFsRelation` over the
+  * manifest-pruning [[TxFileIndex]], plus `InsertableRelation` so
   * `INSERT INTO ... USING tx` commits through the manifest protocol.
-  * After a successful insert the relation's index REPINS to the new
-  * head — a temp view created before the insert reads its own write.
+  * Clean and DV-only snapshots both take it — live deletion vectors are
+  * applied inside [[TxParquetFileFormat]]'s reader. After a successful
+  * insert the relation's index REPINS to the new head — a temp view
+  * created before the insert reads its own write, with that head's DVs.
   */
-class TxBatchRelation(spark: SparkSession, root: String,
-    snap: TxTable.Snapshot, insertable: Boolean,
+class TxBatchRelation private (spark: SparkSession, root: String,
+    txIndex: TxFileIndex, insertable: Boolean,
     opts: Map[String, String],
-    partitionBy: Seq[org.apache.spark.sql.types.StructField] = Nil,
-    // column-mapped composition (r18): the surrogate expansion scans
-    // the PHYSICAL vintage-name union and coalesces above — everything
-    // else keeps the logical default
-    dataSchemaOverride: Option[StructType] = None)
+    partitionBy: Seq[StructField], fileSchema: StructType)
   extends HadoopFsRelation(
-    new TxFileIndex(root, snap, partitionBy), StructType(partitionBy),
+    txIndex, StructType(partitionBy),
     // dataSchema stays the FULL table schema — the duplicate-tag layout
     // keeps partition columns in the files too, and HadoopFsRelation's
     // overlap resolution keeps them at their data-schema position while
     // reading their values from the PartitionDirectory rows (so the
     // surfaced posture changes the plan, never the answer)
-    dataSchemaOverride.getOrElse(TxDataSource.schemaOf(spark, root, snap)),
+    fileSchema,
     // a manifest-declared hash-bucket layout surfaces as a real
     // BucketSpec: the scan groups files by the bucket id in their name
     // (Spark's own convention, written by the bucketed committer) and
@@ -230,17 +344,29 @@ class TxBatchRelation(spark: SparkSession, root: String,
     // report SortOrder and the merge join drops its sorts (Spark
     // itself withholds the ordering for multi-file buckets). Sound
     // because the commit protocol enforces the layout on every append
-    // and DROPS the declaration on any rewrite that could break it.
-    snap.bucketSpec.map { case (n, cols) =>
+    // and DROPS the declaration on any rewrite that could break it;
+    // in-place DV deletes keep both the bucket and the in-file order.
+    txIndex.snap.bucketSpec.map { case (n, cols) =>
       org.apache.spark.sql.catalyst.catalog.BucketSpec(n, cols, cols) },
-    new TxParquetFileFormat, opts)(spark)
+    new TxParquetFileFormat(root, txIndex), opts)(spark)
   with InsertableRelation {
 
-  def index: TxFileIndex = location.asInstanceOf[TxFileIndex]
+  def this(spark: SparkSession, root: String, snap: TxTable.Snapshot,
+      insertable: Boolean, opts: Map[String, String],
+      partitionBy: Seq[StructField] = Nil,
+      // column-mapped composition (r18): the surrogate expansion scans
+      // the PHYSICAL vintage-name union and coalesces above — everything
+      // else keeps the logical default
+      dataSchemaOverride: Option[StructType] = None) =
+    this(spark, root, new TxFileIndex(root, snap, partitionBy), insertable,
+      opts, partitionBy,
+      dataSchemaOverride.getOrElse(TxDataSource.schemaOf(spark, root, snap)))
+
+  def index: TxFileIndex = txIndex
 
   /** The pinned snapshot — the seam metadata-only rewrites consult
-    * ([[graft.plans.TxMetadataAgg]] reads its `rows` lines). Via the
-    * index so an INSERT's repin is visible.
+    * ([[graft.plans.TxMetadataAgg]] reads its `rows` and `dv` lines).
+    * Via the index so an INSERT's repin is visible.
     */
   private[graft] def snapshot: TxTable.Snapshot = index.snap
 
@@ -252,14 +378,32 @@ class TxBatchRelation(spark: SparkSession, root: String,
   }
 }
 
-/** MoR/column-mapped relation: manifest-pruned, DV-anti-joined,
+object TxBatchRelation {
+
+  /** The same file-scan shape for internal snapshot reads
+    * (`TxTable.readFilesWithDvs`): [[TxFileIndex]] + [[TxParquetFileFormat]]
+    * (DVs applied in the reader) under a plain `HadoopFsRelation` — not
+    * insertable, unbucketed, and never answered from manifest metadata,
+    * so an API read always opens the files it names.
+    */
+  private[graft] def fileScan(spark: SparkSession, root: String,
+      snap: TxTable.Snapshot, dataSchema: Option[StructType])
+      : HadoopFsRelation = {
+    val index = new TxFileIndex(root, snap)
+    HadoopFsRelation(index, new StructType(),
+      dataSchema.getOrElse(TxDataSource.schemaOf(spark, root, snap)),
+      bucketSpec = None, new TxParquetFileFormat(root, index),
+      Map.empty)(spark)
+  }
+}
+
+/** Column-mapped relation: manifest-pruned, DV-filtered,
   * vintage-coalesced — the full `TxTable.read` semantics behind the
   * standard `spark.read.format("tx")` entry point. The scan plans as a
   * `RowDataSourceScanExec` whose rows come straight from the inner
   * plan's InternalRows (`needConversion = false`); the inner plan
-  * itself is a vectorized parquet scan + broadcast anti-join, so the
-  * per-row cost over the clean path is the anti-join probe — the price
-  * of reading uncompacted deletes, paid only while DVs are live.
+  * itself is the [[TxBatchRelation]] file scan over the survivors (DVs
+  * applied in its reader) plus the coalescing projection.
   */
 final class TxMorRelation(spark: SparkSession, root: String,
     snap0: TxTable.Snapshot, insertable: Boolean,

@@ -290,8 +290,8 @@ object TxSourceQueries {
     * scan ([[TxMorRelation]]): pushed filters still prune the manifest
     * through the ALIAS chain (old files' stats live under `n_chars`,
     * new ones under `chars` — the in-query guard requires files were
-    * actually dropped), survivors take the vectorized scan + broadcast
-    * DV anti-join + vintage coalesce. The oracle restates the final
+    * actually dropped), survivors take the parquet scan with the DVs
+    * applied in its reader + vintage coalesce. The oracle restates the final
     * state on raw documents: a resurrected deleted row, a mixed-up
     * vintage, or a WRONG prune all hash-fail.
     */
@@ -936,14 +936,14 @@ object TxSourceQueries {
     * — the composition gap q208 left): the lang-partitioned fact table
     * takes a `deleteWhere` (live deletion vectors), and
     * `partitionedRead` — which used to refuse here, knocking the table
-    * back to the flat posture until a full rewrite — now expands into
-    * ONE partition-surfaced scan plus the broadcast `(file, pos)` DV
-    * anti-join ([[TxMorDppRouting]]). The in-query guard requires BOTH
+    * back to the flat posture until a full rewrite — now plans as ONE
+    * partition-surfaced scan whose parquet reader drops the deleted
+    * positions ([[TxParquetFileFormat]]). The in-query guard requires BOTH
     * mechanisms at once: the planned fact scan carries a
     * dynamicpruning filter from the dim-side region predicate AND reads
     * strictly fewer files than the snapshot holds, while the oracle
     * (which excludes the deleted rows arithmetically) proves the
-    * anti-join dropped exactly the deleted rows and nothing else. At
+    * reader dropped exactly the deleted rows and nothing else. At
     * 100 TB this keeps THE star-schema mechanism alive through the
     * routine delete-correct-reingest cycle instead of paying a
     * full-table rewrite to win it back.

@@ -125,7 +125,7 @@ class TxDataSourceSpec extends AnyFunSuite {
     }
   }
 
-  /** The TxMorRelation a planned scan ran through — the MoR-path
+  /** The TxMorRelation a planned scan ran through — the column-mapped
     * sibling of [[scanIndex]] (the plan leaf is a RowDataSourceScan).
     */
   private def morRelation(df: DataFrame): graft.sources.TxMorRelation = {
@@ -144,17 +144,92 @@ class TxDataSourceSpec extends AnyFunSuite {
       TxTable.commit(spark, root,
         (1L to 10L).map(i => (i, s"s$i")).toDF("id", "s"))
       TxTable.deleteWhere(spark, root, col("id") === 3L)
-      // live DVs: the relation degrades to the MoR-aware scan and the
-      // deleted row never resurrects
+      // live DVs: the relation keeps the file-granular shape, its
+      // parquet reader drops the deleted row — it never resurrects
       val df = spark.read.format("tx").load(root)
       assert(df.collect().map(_.getLong(0)).toSet ==
         (1L to 10L).toSet - 3L)
-      morRelation(df) // pins the MoR shape was actually planned
-      // after a purge the table is clean again → file-granular path
+      // pins the shape actually planned: one FileSourceScan over the
+      // DV-carrying snapshot's TxFileIndex, and no join above it
+      assert(TxTable.hasLiveDvs(scanIndex(df).snap))
+      assert(df.queryExecution.sparkPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }.isEmpty, s"DVs planned as a join:\n${df.queryExecution.sparkPlan}")
+      // after a purge the table is clean again
       TxTable.purgeDeletes(spark, root)
       val clean = spark.read.format("tx").load(root)
       assert(clean.count() == 9L)
-      scanIndex(clean) // back on FileSourceScan over TxFileIndex
+      assert(!TxTable.hasLiveDvs(scanIndex(clean).snap))
+    }
+  }
+
+  test("a DV read serves _metadata.row_index and file_path: physical " +
+      "coordinates, deleted rows absent") {
+    withRoot { root =>
+      import spark.implicits._
+      TxTable.commit(spark, root,
+        (1L to 30L).map(i => (i, s"s$i")).toDF("id", "s").repartition(3))
+      def coords(df: DataFrame): Map[Long, (Long, String)] =
+        df.select(col("id"), col("_metadata.row_index"),
+          col("_metadata.file_path")).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
+      val before = coords(spark.read.format("tx").load(root))
+      TxTable.deleteWhere(spark, root, col("id") % 4 === 0)
+      val t = spark.read.format("tx").load(root)
+      assert(coords(t) == before.filter(_._1 % 4 != 0))
+      // the row index alone, no data column
+      assert(t.select(col("_metadata.row_index")).count() == 23L)
+      assert(t.select(col("_metadata.row_index")).collect().map(_.getLong(0))
+        .sorted.toSeq == before.filter(_._1 % 4 != 0).values.map(_._1)
+          .toSeq.sorted)
+    }
+  }
+
+  test("DVs apply under partition values holding a space and a '+', " +
+      "flat and partitionedRead") {
+    withRoot { root =>
+      import spark.implicits._
+      val rows = (0L until 24L).map(i =>
+        (i, Seq("old world", "a+b", "plain")((i % 3).toInt)))
+      TxTable.commit(spark, root, rows.toDF("id", "p"), TxTable.Overwrite,
+        partitionBy = Some("p"))
+      TxTable.deleteWhere(spark, root, col("id") % 4 === 1)
+      // every partition lost rows, so every path spelling is exercised
+      assert(rows.filter(_._1 % 4 == 1).map(_._2).toSet ==
+        Set("old world", "a+b", "plain"))
+      val want = rows.filter(_._1 % 4 != 1).toSet
+      def got(df: DataFrame): Set[(Long, String)] = df.select("id", "p")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got(spark.read.format("tx").load(root)) == want)
+      val surf = spark.read.format("tx").option("partitionedRead", "true")
+        .load(root)
+      assert(surf.queryExecution.sparkPlan.collectLeaves().exists {
+        case f: FileSourceScanExec => f.relation.partitionSchema.nonEmpty
+        case _ => false
+      }, "premise: the surfaced posture")
+      assert(got(surf) == want)
+    }
+  }
+
+  test("a USING tx view INSERTed into after another writer's deleteWhere " +
+      "applies the new head's DVs") {
+    withRoot { root =>
+      import spark.implicits._
+      (1L to 6L).map(i => (i, s"s$i")).toDF("id", "s")
+        .write.format("tx").save(root)
+      val view = s"tx_dvins_${System.nanoTime()}"
+      spark.sql(
+        s"CREATE TEMPORARY VIEW $view USING tx OPTIONS (path '$root')")
+      try {
+        // the view's relation is pinned to the clean v0
+        assert(spark.sql(s"SELECT id FROM $view").count() == 6L)
+        TxTable.deleteWhere(spark, root, col("id") === 2L)
+        spark.sql(s"INSERT INTO $view VALUES (7, 's7')")
+        // the insert repinned the view to a head that carries the DVs
+        assert(TxTable.hasLiveDvs(TxTable.currentSnapshot(root).get))
+        assert(spark.sql(s"SELECT id FROM $view").collect()
+          .map(_.getLong(0)).toSet == (1L to 7L).toSet - 2L)
+      } finally spark.catalog.dropTempView(view)
     }
   }
 
@@ -351,8 +426,8 @@ class TxDataSourceSpec extends AnyFunSuite {
       assert(spark.read.format("tx").option("startingVersion", "2")
         .load(root).count() == 0L)
       // a delete INSIDE the window puts DVs on a window file — the
-      // MoR-aware relation anti-joins it out: rows added in the window
-      // AND still live at the ending version
+      // relation's reader drops it: rows added in the window AND still
+      // live at the ending version
       TxTable.commit(spark, root, b(13, 16), TxTable.Append)
       TxTable.deleteWhere(spark, root, col("id") === 14L)
       assert(spark.read.format("tx").option("startingVersion", "2")
@@ -926,14 +1001,14 @@ class TxDataSourceSpec extends AnyFunSuite {
       TxTable.deleteWhere(ss, root, col("doc_id") % 4 === 0)
       val surf = ss.read.format("tx").option("partitionedRead", "true")
         .load(root)
-      // the anti-join applied the DVs exactly: identical to the MoR
-      // relation (the flat posture) on the same snapshot
+      // the reader applied the DVs exactly: identical to the flat
+      // posture on the same snapshot
       val flat = ss.read.format("tx").load(root)
       assert(surf.collect().map(_.toSeq).toSet ==
         flat.collect().map(_.toSeq).toSet)
       assert(surf.count() == 9L) // 12 - 3 deleted (0,4,8)
       // and the posture's point: a dim-side filter still dynamically
-      // prunes the fact scan UNDER the DV anti-join
+      // prunes the fact scan whose reader applies the DVs
       Seq(("de", "eu"), ("en", "eu"), ("zh", "asia")).toDF("lang", "region")
         .write.mode("overwrite").parquet(s"$root-dim")
       val dim = ss.read.parquet(s"$root-dim")

@@ -15,7 +15,8 @@ import graft.operators.TxTable
 
 /** Merge-on-read DELETE via deletion vectors ([[TxTable.deleteWhere]] /
   * [[TxTable.purgeDeletes]]): position-level deletes that rewrite no data
-  * file, applied on the read side by an anti-join on (file, row position).
+  * file, applied on the read side inside the parquet reader by (file,
+  * physical row index).
   * Pins the contracts result-identity alone can't see: file lists
   * untouched by a delete, DV accumulation across deletes, materialization
   * on purge AND on every copy-on-write path (merge/deleteRange/optimize),
@@ -331,6 +332,64 @@ class TxDvSpec extends AnyFunSuite {
         .filter(col("id").between(1, 10))
         .select("id").collect().map(_.getLong(0)).toSet
       assert(got == (1L to 10L).toSet - 3L)
+    }
+  }
+
+  test("in-reader DVs: a pushed filter skips early row groups, the deleted " +
+      "positions sit in a later one") {
+    withRoot { root =>
+      val ss = spark.newSession()
+      // small row groups, so the one data file holds several, and small
+      // pages, so column-index filtering can skip pages inside a group
+      ss.conf.set("parquet.block.size", "4096")
+      ss.conf.set("parquet.block.size.row.check.min", "50")
+      ss.conf.set("parquet.block.size.row.check.max", "50")
+      ss.conf.set("parquet.page.row.count.limit", "20")
+      TxTable.commit(ss, root,
+        ss.range(0, 3000).selectExpr("id", "id * 3 AS v").coalesce(1))
+      val file = TxTable.currentSnapshot(root).get.files match {
+        case Seq(one) => one
+        case many => fail(s"premise: one data file, got ${many.size}")
+      }
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new Path(TxTable.absFile(root, file)),
+          ss.sessionState.newHadoopConf()))
+      val groups = try reader.getFooter.getBlocks.size finally reader.close()
+      assert(groups >= 4, s"premise: several row groups, got $groups")
+      val deleted = Set(2503L, 2600L, 2750L, 2999L)
+      TxTable.deleteWhere(ss, root, col("id").isin(deleted.toSeq: _*))
+      val df = ss.read.format("tx").load(root).filter(col("id") >= 2500L)
+      assert(df.select("id", "v").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        (2500L until 3000L).filterNot(deleted).map(i => i -> i * 3).toMap)
+      // row groups below 2500 were skipped, so the in-reader row index
+      // had to stay physical for the later group's positions to match
+      object H extends AdaptiveSparkPlanHelper
+      val emitted = H.collect(df.queryExecution.executedPlan) {
+        case f: FileSourceScanExec => f.metrics("numOutputRows").value
+      }.sum
+      assert(emitted < 3000L - deleted.size,
+        s"no row group was skipped ($emitted rows emitted)")
+    }
+  }
+
+  test("a clone carries its source's DVs; a delete on the clone adds its own") {
+    withRoot { root =>
+      seed(root)
+      TxTable.deleteWhere(spark, root, col("id") <= 5L)
+      val tgt = s"${root}_clone"
+      TxTable.clone(spark, root, tgt)
+      val snap = TxTable.currentSnapshot(tgt).get
+      assert(snap.files.forall(_.startsWith("/")) && TxTable.hasLiveDvs(snap),
+        "premise: foreign entries carrying the source's DVs")
+      def txIds(r: String): Set[Long] = spark.read.format("tx").load(r)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(txIds(tgt) == (6L to 40L).toSet)
+      assert(ids(tgt) == (6L to 40L).toSet)
+      TxTable.deleteWhere(spark, tgt, col("id") === 7L)
+      assert(txIds(tgt) == (6L to 40L).toSet - 7L)
+      assert(txIds(root) == (6L to 40L).toSet, "the source is untouched")
     }
   }
 

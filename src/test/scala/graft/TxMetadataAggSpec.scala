@@ -236,14 +236,39 @@ class TxMetadataAggSpec extends AnyFunSuite {
       val grouped = t.groupBy("g").agg(count(lit(1)).as("n"))
       assert(!isMetadataAnswered(grouped))
       assert(grouped.count() == 6L)
-      // a MoR delete routes to TxMorRelation — COUNT(*) still answers
-      // (r17 third wave), from LIVE counts: rows lines minus the
-      // disjoint per-file DV counts, never the stale as-written number
+      // a MoR delete keeps the TxBatchRelation shape (DVs applied in its
+      // parquet reader) — COUNT(*) still answers, from LIVE counts: rows
+      // lines minus the disjoint per-file DV counts, never the stale
+      // as-written number
       TxTable.deleteWhere(spark, root, col("id") < 10L)
       val afterDelete = t.agg(count(lit(1)).as("n"))
       assert(isMetadataAnswered(afterDelete),
         s"still scans:\n${afterDelete.queryExecution}")
       assert(afterDelete.collect().head.getLong(0) == 90L)
+    }
+  }
+
+  test("DV-only format(tx) read: COUNT(*) answers live counts, SUM over " +
+      "recorded sums refuses and scans DV-exact") {
+    withRoot { root =>
+      TxTable.commit(spark, root,
+        spark.range(0, 100L).selectExpr("id", "id % 7 AS v"),
+        sumCols = Seq("v"))
+      TxTable.deleteWhere(spark, root, col("id") < 30L)
+      val t = spark.read.format("tx").load(root)
+      assert(t.queryExecution.analyzed.collectFirst {
+        case lr: LogicalRelation => lr.relation
+      }.exists(_.isInstanceOf[graft.sources.TxBatchRelation]),
+        "premise: a DV-only snapshot reads as TxBatchRelation")
+      val n = t.agg(count(lit(1)).as("n"))
+      assert(isMetadataAnswered(n), s"still scans:\n${n.queryExecution}")
+      assert(n.collect().head.getLong(0) == 70L)
+      assert(t.count() == 70L)
+      // sum lines describe the files as written: the rule refuses, and
+      // the scan's reader drops the deleted rows
+      val sm = t.agg(sum(col("v")).as("s"))
+      assert(!isMetadataAnswered(sm))
+      assert(sm.collect().head.getLong(0) == (30L until 100L).map(_ % 7).sum)
     }
   }
 

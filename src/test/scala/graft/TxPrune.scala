@@ -11,7 +11,9 @@ import graft.sources.{TxBatchRelation, TxFileIndex, TxMorRelation}
   * ([[TxFileIndex.prunedFiles]]) keeps when `cond` filters a
   * `format("tx")` read of `root` — the condition resolved and optimized
   * exactly as the planned scan would receive it, evaluated by the
-  * relation's own index (clean or MoR), without executing anything.
+  * relation's own index (TxBatchRelation for clean and DV-only
+  * snapshots, TxMorRelation for column-mapped ones), without executing
+  * anything.
   */
 object TxPrune extends PredicateHelper {
 
